@@ -1063,11 +1063,9 @@ def q_ann_topk_maintained(spark: SparkSession, sf: str) -> DataFrame:
     # filters to its baked-in eligibility — a subset of full-width, so
     # the projections reproduce ann_lsh_index/ann_ivf_index
     # row-for-row; differentially covered by the maintained-vs-rebuilt
-    # oracle hash).
-    lsh_ok = (
-        "forall(embedding, v -> v is not null and not isnan(v))"
-        " and exists(embedding, v -> v != cast(0.0 as double))"
-    )
+    # oracle hash).  The LSH flag is the index builder's own
+    # ``_lsh_eligible`` rule; its null/width half is already true of
+    # every ``base`` row.
     base = materialize(
         ensure_parallelism(
             emb.filter(
@@ -1078,7 +1076,7 @@ def q_ann_topk_maintained(spark: SparkSession, sf: str) -> DataFrame:
             "vec_id",
             "embedding",
             F.expr(norm_expr("embedding")).alias("norm"),
-            F.expr(lsh_ok).alias("_lsh_ok"),
+            _lsh_eligible("embedding", _EMB_DIM).alias("_lsh_ok"),
             hyperplane_lsh_bucket("embedding", planes).alias("_bucket"),
             F.expr(_cell_dots_expr("embedding", cents)).alias("_dots"),
         )

@@ -37,6 +37,17 @@ def _ensure_workers_can_import() -> None:
         )
 
 
+def _default_driver_memory() -> str:
+    """16g (sized for a 128 GiB local[32] host), capped at ¾ of this
+    host's physical RAM so a smaller host never asks the JVM for a heap
+    larger than the machine.  ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "16g"
+    return f"{min(16 * 1024, ram * 3 // 4 // 2**20)}m"
+
+
 def get_session(
     app_name: str = "one-to-many-join-spark",
     master: str | None = None,
@@ -95,9 +106,12 @@ def get_session(
         # kept because the eviction cost is real even where it is not
         # the dominant noise source (see SCALE.md "Measurement noise").
         .config("spark.sql.codegen.cache.maxEntries", "2000")
-        # 16g on a 128 GiB local[32] host: broadcast + window-heavy
-        # queries otherwise run the suite near the 8g ceiling
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # broadcast + window-heavy queries run the suite near an 8g
+        # ceiling on a 128 GiB local[32] host
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
     )
     # SPARK_GRAFT_MASTER overrides the default local[cpus] master without

@@ -15,9 +15,6 @@ from kafka_streams_one_to_many_join_spark.streaming.join import (
     tag_car_moves,
     tag_zone_events,
 )
-from kafka_streams_one_to_many_join_spark.streaming.join_tws import (
-    symmetric_one_to_many_join_tws,
-)
 from kafka_streams_one_to_many_join_spark.streaming.latest import (
     streaming_latest_by_key,
 )
@@ -38,13 +35,11 @@ from kafka_streams_one_to_many_join_spark.streaming.packing import (
 )
 from kafka_streams_one_to_many_join_spark.streaming.similarity import (
     streaming_lsh_topk,
-    streaming_lsh_topk_tws,
 )
 from kafka_streams_one_to_many_join_spark.streaming.sketch import (
     streaming_bloom_filter,
     streaming_cms_counts,
     streaming_hll_distinct,
-    streaming_hll_distinct_tws,
     streaming_quantile_sketch,
 )
 from kafka_streams_one_to_many_join_spark.streaming.windows import (
@@ -62,10 +57,8 @@ __all__ = [
     "streaming_segment_dup_deltas",
     "streaming_segment_dup_totals",
     "streaming_hll_distinct",
-    "streaming_hll_distinct_tws",
     "streaming_quantile_sketch",
     "streaming_lsh_topk",
-    "streaming_lsh_topk_tws",
     "streaming_token_chunks",
     "session_agg",
     "sliding_agg",
@@ -75,7 +68,6 @@ __all__ = [
     "streaming_dedup_within_watermark",
     "streaming_latest_by_key",
     "symmetric_one_to_many_join",
-    "symmetric_one_to_many_join_tws",
     "tag_car_moves",
     "tag_zone_events",
     "tumbling_agg",

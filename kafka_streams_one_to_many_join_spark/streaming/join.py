@@ -23,10 +23,11 @@ operators (``applyInPandasWithState``), mirroring the topology:
 
 Between the stages sits a shuffle on zone_id — Spark's in-engine version of
 the reference's co-partitioning `through` topic (O5, DemoApp.scala:90),
-with no broker round trip.  Chaining two stateful operators in one
-streaming query is restricted in Spark, so the topology helper in the tests
-materializes stage 1 through a parquet directory — which is *exactly* what
-the reference's `through` topic does, minus the broker.
+with no broker round trip.  Spark rejects two ``applyInPandasWithState``
+operators in one streaming query (``AnalysisException: Multiple
+applyInPandasWithStates are not supported``), so the topology helper in the
+tests materializes stage 1 through a parquet directory — which is *exactly*
+what the reference's `through` topic does, minus the broker.
 
 Ordering: the reference relies on per-partition arrival order with no
 timestamps (DemoApp.scala:62-63).  Here each micro-batch is processed in
@@ -40,14 +41,15 @@ O(fan-out) for zone events — identical asymptotics to the reference
 (BASELINE.md "Per-update join cost").  State columns are array-typed (no
 string re-serialization per batch).
 
-Throughput model: ``_move_fn`` / ``_join_fn`` iterate events row-by-row in
-Python.  That is the faithful-semantics cost — the operator is an
-arrival-order state machine (each event's emission depends on state mutated
-by the previous event of the same key), so it cannot be vectorized without
-changing the emission contract.  Per-event cost is constant and small;
-aggregate throughput scales with ``spark.sql.shuffle.partitions`` × number
-of executors, exactly like the reference scales with Kafka partitions ×
-stream threads.  At 100 TB the knob is partition count, not per-row cost.
+Throughput model: the state functions built by ``_make_move_fn`` /
+``_make_join_fn`` iterate events row-by-row in Python.  That is the
+faithful-semantics cost — the operator is an arrival-order state machine
+(each event's emission depends on state mutated by the previous event of
+the same key), so it cannot be vectorized without changing the emission
+contract.  Per-event cost is constant and small; aggregate throughput
+scales with ``spark.sql.shuffle.partitions`` × number of executors, exactly
+like the reference scales with Kafka partitions × stream threads.  At
+100 TB the knob is partition count, not per-row cost.
 
 Checkpoint compatibility: the switch from CSV-string state columns to
 array-typed state columns (round 3) is a state-schema BREAK.  A streaming
@@ -70,7 +72,6 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -154,9 +155,6 @@ def _make_move_fn(ttl_ms: int | None = None):
             yield pd.DataFrame(out)
 
     return fn
-
-
-_move_fn = _make_move_fn()
 
 
 def car_move_detection(
@@ -274,11 +272,6 @@ def _make_join_fn(ttl_ms: int | None = None):
             yield pd.DataFrame(out)
 
     return fn
-
-
-# default (reference-faithful, no expiry) instance — the name existing
-# callers and tests import
-_join_fn = _make_join_fn()
 
 
 def symmetric_one_to_many_join(

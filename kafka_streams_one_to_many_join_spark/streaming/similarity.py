@@ -61,14 +61,13 @@ def _lsh_candidates(
     vec_col: str,
     query_id_col: str,
     probe_hamming: int,
-    caller: str,
 ) -> DataFrame:
-    """The stateless front half shared by both twins: multi-probe bucket
-    rows from the static query side, stream-static bucket join, exact
-    cosine re-rank — identical expressions to the batch operator."""
+    """The stateless front half of ``streaming_lsh_topk``: multi-probe
+    bucket rows from the static query side, stream-static bucket join,
+    exact cosine re-rank — identical expressions to the batch operator."""
     if not corpus_stream.isStreaming:
         raise ValueError(
-            f"{caller} expects a streaming corpus; use "
+            "streaming_lsh_topk expects a streaming corpus; use "
             "functions.similarity.lsh_topk for batch inputs"
         )
     mask_list = ", ".join(
@@ -109,7 +108,8 @@ def _lsh_candidates(
 def _fold_topk(top: dict, pdfs, k: int):
     """Fold candidate frames into the (vec_id → sim) running top dict.
     Returns (new candidate count, ranked [(vec_id, sim)] capped at k) —
-    the pure merge both twins share."""
+    the pure merge, kept apart from the state plumbing so it can be
+    property-tested alone."""
     new = 0
     for pdf in pdfs:
         for v, s in zip(pdf["vec_id"], pdf["sim"]):
@@ -161,8 +161,7 @@ def streaming_lsh_topk(
     ``ttl_ms`` opts into processing-time state expiry exactly like the
     other keyed-state twins (join, MinHash buckets, segment dedup): a
     query whose top-k went unrefreshed past the horizon restarts cold —
-    sliding-corpus ANN, the portable counterpart of the TWS variant's
-    native ttlDurationMs.  Default None keeps keep-forever semantics,
+    sliding-corpus ANN.  Default None keeps keep-forever semantics,
     matching the batch operator.
     """
     import pandas as pd
@@ -176,7 +175,7 @@ def streaming_lsh_topk(
 
     candidates = _lsh_candidates(
         corpus_stream, queries, planes, id_col, vec_col, query_id_col,
-        probe_hamming, "streaming_lsh_topk",
+        probe_hamming,
     )
 
     output_schema = StructType(
@@ -242,118 +241,4 @@ def streaming_lsh_topk(
         stateStructType=state_schema,
         outputMode=output_mode,
         timeoutConf="ProcessingTimeTimeout" if ttl_ms is not None else "NoTimeout",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Spark-4 typed-state variant
-# ---------------------------------------------------------------------------
-
-
-def streaming_lsh_topk_tws(
-    corpus_stream: DataFrame,
-    queries: DataFrame,
-    planes: list[list[float]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    probe_hamming: int = 1,
-    ttl_ms: int | None = None,
-    output_mode: str = "update",
-) -> DataFrame:
-    """``streaming_lsh_topk`` on ``transformWithStateInPandas`` — the
-    typed-state API the symmetric join's and HLL's ``_tws`` variants use,
-    extended to the similarity family: per-query ``ValueState`` holding
-    the (vec_ids, sims, n_seen) top-k arrays, identical candidate
-    generation and fold (``_lsh_candidates`` / ``_fold_topk`` are shared
-    code, so the emitted rows are bit-identical to the portable twin by
-    construction).
-
-    Typed-state win: native ``ttlDurationMs`` — an opt-in
-    sliding-corpus ANN where a query whose top-k went unrefreshed past
-    the TTL restarts cold (default None keeps keep-forever semantics,
-    matching the batch operator).  Requires Spark >= 4.0 with protobuf
-    resolvable (compat.ensure_protobuf); portable hosts use
-    ``streaming_lsh_topk``.  Caveat shared with the other TWS TTLs:
-    processing-time mode needs real trigger progression — drive it with
-    wall-clock micro-batches, not ``processAllAvailable`` drains.
-
-    TTL divergence between the twins (inherent to the two state APIs):
-    the portable twin's ``setTimeoutDuration`` is cleared on EVERY
-    invocation for a key and must be re-armed even when the batch
-    contributed nothing new (the ``not new`` branch — skipping the
-    re-arm there would make the state immortal), so a duplicate-only
-    batch extends the portable twin's state lifetime; this variant's
-    native ``ttlDurationMs`` clock resets only on ``state.update``, so
-    the same batch does NOT extend it.  With ttl_ms=None (the default,
-    and the batch-equivalence contract) the twins are bit-identical;
-    under TTL, expiry timing may differ by up to one duplicate-only
-    batch interval.
-    """
-    import pandas as pd
-
-    from kafka_streams_one_to_many_join_spark.streaming.join_tws import (
-        HAS_TWS,
-        StatefulProcessor,
-    )
-
-    if not HAS_TWS:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark >= 4.0 with protobuf "
-            "installed; use streaming.streaming_lsh_topk instead"
-        )
-
-    candidates = _lsh_candidates(
-        corpus_stream, queries, planes, id_col, vec_col, query_id_col,
-        probe_hamming, "streaming_lsh_topk_tws",
-    )
-    ttl = ttl_ms
-
-    class TopkProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState(
-                "topk",
-                "vec_ids array<bigint>, sims array<double>, n_seen bigint",
-                ttlDurationMs=ttl,
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                ids, sims, n_seen = self._state.get()
-                top = {int(v): float(s) for v, s in zip(ids, sims)}
-                n_seen = int(n_seen)
-            else:
-                top, n_seen = {}, 0
-            new, ranked = _fold_topk(top, rows, k)
-            if not new:
-                return
-            n_seen += new
-            self._state.update(
-                ([v for v, _ in ranked], [s for _, s in ranked], n_seen)
-            )
-            yield pd.DataFrame(
-                [
-                    {
-                        "query_id": key[0],
-                        "vec_id": v,
-                        "sim": s,
-                        "rank": r + 1,
-                        "n_seen": n_seen,
-                    }
-                    for r, (v, s) in enumerate(ranked)
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return candidates.groupBy(query_id_col).transformWithStateInPandas(
-        statefulProcessor=TopkProcessor(),
-        outputStructType=(
-            "query_id bigint, vec_id bigint, sim double, "
-            "rank bigint, n_seen bigint"
-        ),
-        outputMode=output_mode,
-        timeMode="processingTime" if ttl_ms is not None else "none",
     )

@@ -435,88 +435,3 @@ def streaming_bloom_filter(
         outputMode=output_mode,
         timeoutConf="NoTimeout",
     )
-
-
-# ---------------------------------------------------------------------------
-# Spark-4 typed-state variant of the HLL sketch
-# ---------------------------------------------------------------------------
-
-
-def streaming_hll_distinct_tws(
-    events: DataFrame, key_col: str, value_col: str, ttl_ms: int | None = None
-) -> DataFrame:
-    """``streaming_hll_distinct`` on ``transformWithStateInPandas`` — the
-    typed-state API the symmetric join's ``_tws`` variant uses, extended
-    to the sketch family: per-key ``ValueState`` holding the m=256
-    register array + exact seen-count, identical hash/register/estimator
-    recipe (the registers of the TWS twin, the applyInPandasWithState
-    twin, and the batch SQL query are bit-identical by construction).
-
-    Typed-state wins carried over from join_tws.py: native
-    ``ttlDurationMs`` on the state (opt-in sliding-window cardinality —
-    a key idle past the TTL restarts its sketch cold, with no timer
-    plumbing in user code), and schema-checked state round-trips.
-    Requires Spark >= 4.0 with protobuf resolvable (compat.
-    ensure_protobuf); callers on portable hosts use
-    ``streaming_hll_distinct``.  Caveat shared with join_tws's TTL: the
-    processing-time mode that TTL requires needs real trigger
-    progression — drive it with wall-clock micro-batches (the
-    join_tws TTL test's harness), not ``processAllAvailable`` drains,
-    which can block on the timer machinery.
-    """
-    from kafka_streams_one_to_many_join_spark.streaming.join_tws import (
-        HAS_TWS,
-        StatefulProcessor,
-    )
-
-    if not HAS_TWS:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark >= 4.0 with protobuf "
-            "installed; use streaming.streaming_hll_distinct instead"
-        )
-
-    ttl = ttl_ms
-
-    class HllProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState(
-                "hll", "registers array<integer>, n_seen bigint",
-                ttlDurationMs=ttl,
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                regs_raw, n = self._state.get()
-                regs = list(regs_raw)
-            else:
-                regs, n = [0] * _M, 0
-            for pdf in rows:
-                for v in pdf["value"]:
-                    if v is None or (isinstance(v, float) and pd.isna(v)):
-                        continue
-                    bucket, rho = hll_register(v)
-                    if rho > regs[bucket]:
-                        regs[bucket] = rho
-                    n += 1
-            self._state.update((regs, n))
-            yield pd.DataFrame(
-                [{
-                    "key": key[0],
-                    "n_seen": n,
-                    "hll_estimate": hll_estimate(regs),
-                }]
-            )
-
-        def close(self) -> None:
-            pass
-
-    keyed = events.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("string").alias("value"),
-    )
-    return keyed.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=HllProcessor(),
-        outputStructType=_OUTPUT,
-        outputMode="update",
-        timeMode="processingTime" if ttl_ms is not None else "none",
-    )

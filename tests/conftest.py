@@ -23,77 +23,6 @@ def pytest_configure(config):
         "kafka: opt-in broker integration — runs only with "
         "SPARK_GRAFT_KAFKA_BOOTSTRAP set (see tests/test_kafka_integration.py)",
     )
-    config.addinivalue_line(
-        "markers",
-        "tws_worker_spawn_flake: transformWithStateInPandas e2e — retried "
-        "once if the run dies on the known worker-spawn infra flake (the "
-        "JVM's connect-back accept window is a HARDCODED 10 s in "
-        "PythonWorkerFactory.createSimpleWorker — Selector.select(10000L) — "
-        "so no conf can widen it; under this host's minute-scale "
-        "hypervisor-contention bursts a fresh TWS pre-init worker can take "
-        "longer than that to spawn in a long-lived session, r10 review: "
-        "2 failures at stage ~5000, both green in a fresh process).  "
-        "Retirement was INVESTIGATED and is impossible without patching "
-        "Spark (r12, bytecode-verified on spark-core 4.1.2): the pre-init "
-        "path is StreamingPythonRunner.init -> createSimpleWorker, which "
-        "execs a FRESH daemonless python process per TWS query start — "
-        "PythonWorkerFactory pooling/reuse never applies to simple "
-        "workers, so a session-start pre-warm cannot make later query "
-        "starts skip the spawn, and the 10000L accept literal has no "
-        "conf.  The signature-scoped retry IS the bound; retried runs "
-        "are recorded via user_properties so flake frequency survives "
-        "into junitxml artifacts.",
-    )
-
-
-_WORKER_SPAWN_SIGNATURES = (
-    "Python worker failed to connect back",
-    "Timed out while waiting for the Python worker to connect back",
-)
-
-
-def _is_worker_spawn_flake(report) -> bool:
-    try:
-        text = report.longreprtext
-    except AttributeError:
-        return False
-    return report.failed and any(s in text for s in _WORKER_SPAWN_SIGNATURES)
-
-
-def pytest_runtest_protocol(item, nextitem):
-    """Bounded (1) retry for the TWS e2e family, ONLY on the worker-spawn
-    infra signature — any assertion failure or other error still fails
-    immediately.  The retry sleeps 30 s first so it lands outside the
-    minute-scale contention burst that starved the 10 s accept window."""
-    if item.get_closest_marker("tws_worker_spawn_flake") is None:
-        return None
-    import time
-
-    from _pytest.runner import runtestprotocol
-
-    item.ihook.pytest_runtest_logstart(nodeid=item.nodeid, location=item.location)
-    reports = runtestprotocol(item, nextitem=nextitem, log=False)
-    flaked = [r for r in reports if _is_worker_spawn_flake(r)]
-    if flaked:
-        print(
-            f"\n[tws_worker_spawn_flake] {item.nodeid}: worker-spawn infra "
-            "flake detected; sleeping 30 s and retrying once",
-            flush=True,
-        )
-        # make the discarded first attempt survive into test artifacts
-        # (junitxml renders user_properties; a retried-then-green run was
-        # previously indistinguishable from a clean pass — r11 ADVICE):
-        # the property rides on the item, so the RETRY's reports carry it
-        first_failure = flaked[0].longreprtext.splitlines()[-1][:300]
-        item.user_properties.append(
-            ("tws_worker_spawn_flake_retried", first_failure)
-        )
-        time.sleep(30)
-        reports = runtestprotocol(item, nextitem=nextitem, log=False)
-    for r in reports:
-        item.ihook.pytest_runtest_logreport(report=r)
-    item.ihook.pytest_runtest_logfinish(nodeid=item.nodeid, location=item.location)
-    return True
 
 
 # per-directory ledger of files already given a deterministic mtime by

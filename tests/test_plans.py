@@ -870,7 +870,7 @@ def test_streaming_ann_candidate_join_broadcasts(spark, sf_dir):
     )
     cand = _lsh_candidates(
         stream, queries, seeded_planes(8, dim, 7),
-        "vec_id", "embedding", "query_id", 1, "test",
+        "vec_id", "embedding", "query_id", 1,
     )
     plan = plans.formatted_plan(cand)
     assert "BroadcastHashJoin" in plan, plan

@@ -334,156 +334,6 @@ def test_streaming_latest_by_key_changelog(spark, tmp_path):
     assert final[1] == (1, 3, 102, 3.0) and final[2] == (2, 1, 100, 9.0)
 
 
-def test_tws_gate_fails_fast_without_protobuf(spark, monkeypatch):
-    """Where TWS is unavailable (no protobuf on the host — the TWS
-    state-server protocol needs it), the operator must fail fast with
-    NotImplementedError at plan construction, not crash workers at runtime.
-    Checked unconditionally by simulating the protobuf-less host
-    (monkeypatched HAS_TWS) — the end-to-end path is covered by
-    test_tws_join_matches_edge_cases on hosts where compat.ensure_protobuf
-    resolves a runtime."""
-    from kafka_streams_one_to_many_join_spark.streaming import join_tws
-
-    monkeypatch.setattr(join_tws, "HAS_TWS", False)
-    symmetric_one_to_many_join_tws = join_tws.symmetric_one_to_many_join_tws
-    tagged = tag_car_moves(
-        car_move_detection(
-            read_stream(spark, "rate").selectExpr(
-                "value as seq", "cast(value as int) as car_id",
-                "cast(value % 5 as int) as to_zone_id",
-                "cast(value as double) as fuel_level",
-            )
-        )
-    )
-    with pytest.raises(NotImplementedError):
-        symmetric_one_to_many_join_tws(tagged)
-
-
-@pytest.mark.tws_worker_spawn_flake
-def test_tws_join_matches_edge_cases(spark, tmp_path):
-    """The transformWithStateInPandas variant (ValueState + MapState) must
-    produce the identical emission trace as the applyInPandasWithState one
-    on the FIXTURES.md edge-case scenario.  Skipped (visibly) where the TWS
-    protobuf protocol is unavailable; the processor logic is still covered
-    by the stub-state unit test below, and the gate by the test above.
-    """
-    from kafka_streams_one_to_many_join_spark.streaming import (
-        symmetric_one_to_many_join_tws,
-    )
-    from kafka_streams_one_to_many_join_spark.streaming.join_tws import HAS_TWS
-
-    if not HAS_TWS:
-        pytest.skip("transformWithStateInPandas needs protobuf (absent here)")
-
-    tmp = str(tmp_path)
-    os.makedirs(f"{tmp}/cars", exist_ok=True)
-    spark.createDataFrame(CAR_ROWS, CAR_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{tmp}/cars")
-    spark.createDataFrame(ZONE_ROWS, ZONE_SCHEMA).coalesce(1).write.parquet(
-        f"{tmp}/zones"
-    )
-    cars_stream = read_stream(
-        spark, "parquet", f"{tmp}/cars",
-        schema=spark.createDataFrame([], CAR_SCHEMA).schema,
-    )
-    moves = car_move_detection(cars_stream)
-    q1 = write_stream(
-        moves, "parquet", f"{tmp}/through", checkpoint=f"{tmp}/cp1",
-        query_name="tws_moves",
-    )
-    q1.processAllAvailable()
-    q1.stop()
-
-    moves_stream = read_stream(spark, "parquet", f"{tmp}/through", schema=moves.schema)
-    zones_stream = read_stream(
-        spark, "parquet", f"{tmp}/zones",
-        schema=spark.createDataFrame([], ZONE_SCHEMA).schema,
-    )
-    tagged = tag_car_moves(moves_stream).unionByName(tag_zone_events(zones_stream))
-    joined = symmetric_one_to_many_join_tws(tagged)
-    q2 = write_stream(joined, "memory", query_name="tws_joined", checkpoint=f"{tmp}/cp2")
-    q2.processAllAvailable()
-    q2.stop()
-    got = sorted(tuple(r) for r in spark.sql("select * from tws_joined").collect())
-    assert got == EXPECTED
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-class _FakeMapState:
-    def __init__(self):
-        self._m = {}
-
-    def containsKey(self, k):
-        return k in self._m
-
-    def updateValue(self, k, v):
-        self._m[k] = v
-
-    def removeKey(self, k):
-        self._m.pop(k, None)
-
-    def iterator(self):
-        return iter(self._m.items())
-
-
-class _FakeHandle:
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return _FakeValueState()
-
-    def getMapState(self, name, kschema, vschema, ttlDurationMs=None):
-        return _FakeMapState()
-
-
-def test_tws_processor_logic_matches_fixture():
-    """Drive SymmetricJoinProcessor.handleInputRows directly with stub
-    state handles: the upsert/probe/delete/fan-out logic must reproduce
-    the FIXTURES.md emission trace (the streaming integration test skips
-    where the TWS protobuf protocol is unavailable)."""
-    import pandas as pd
-
-    from kafka_streams_one_to_many_join_spark.streaming.join_tws import (
-        SymmetricJoinProcessor,
-    )
-
-    # tagged rows for zone 100, derived from CAR_ROWS/ZONE_ROWS by hand
-    # (car1 arr@0; z=50@1; car2 arr@2; z=60@3; car1 leave@4; z=70@5;
-    #  car2 arr+leave@6 (quirk); z=80@7)
-    rows = [
-        dict(kind="car", seq=0, emit_rank=0, car_id=1, is_arriving=True, fuel_level=10.0, pollution_level=None),
-        dict(kind="zone", seq=1, emit_rank=2, car_id=None, is_arriving=None, fuel_level=None, pollution_level=50.0),
-        dict(kind="car", seq=2, emit_rank=0, car_id=2, is_arriving=True, fuel_level=20.0, pollution_level=None),
-        dict(kind="zone", seq=3, emit_rank=2, car_id=None, is_arriving=None, fuel_level=None, pollution_level=60.0),
-        dict(kind="car", seq=4, emit_rank=1, car_id=1, is_arriving=False, fuel_level=11.0, pollution_level=None),
-        dict(kind="zone", seq=5, emit_rank=2, car_id=None, is_arriving=None, fuel_level=None, pollution_level=70.0),
-        dict(kind="car", seq=6, emit_rank=0, car_id=2, is_arriving=True, fuel_level=21.0, pollution_level=None),
-        dict(kind="car", seq=6, emit_rank=1, car_id=2, is_arriving=False, fuel_level=21.0, pollution_level=None),
-        dict(kind="zone", seq=7, emit_rank=2, car_id=None, is_arriving=None, fuel_level=None, pollution_level=80.0),
-    ]
-    proc = SymmetricJoinProcessor()
-    proc.init(_FakeHandle())
-    out = list(proc.handleInputRows((100,), iter([pd.DataFrame(rows)]), None))
-    got = sorted(
-        (int(r.car_id), int(r.zone_id), float(r.fuel_level), float(r.pollution_level))
-        for pdf in out
-        for r in pdf.itertuples(index=False)
-    )
-    assert got == EXPECTED
-
-
 def test_stream_stream_join_inner(spark, tmp_path):
     from kafka_streams_one_to_many_join_spark.streaming import stream_stream_join
 
@@ -901,29 +751,6 @@ def test_join_state_ttl_expires_silent_zones(spark, tmp_path):
         "ttl_on", batches, cleanup_ttl_ms=400,
     )
     assert expiring == [(1, 100, 10.0, 50.0)]
-
-
-@pytest.mark.tws_worker_spawn_flake
-def test_tws_join_native_ttl_expires_state(spark, tmp_path):
-    """The typed-state variant's NATIVE ttlConfig: a zone value written in
-    batch 1 is expired when read past the TTL; without TTL it is
-    remembered."""
-    from kafka_streams_one_to_many_join_spark.streaming import (
-        symmetric_one_to_many_join_tws,
-    )
-
-    batches = [[_zrow(0, 100, 50.0)], [_crow(1, 100, 1, 10.0)]]
-    forever = _ttl_scenario(
-        spark, tmp_path, lambda st: symmetric_one_to_many_join_tws(st),
-        "tws_ttl_off", batches,
-    )
-    assert forever == [(1, 100, 10.0, 50.0)]
-    expiring = _ttl_scenario(
-        spark, tmp_path,
-        lambda st: symmetric_one_to_many_join_tws(st, ttl_ms=400),
-        "tws_ttl_on", batches,
-    )
-    assert expiring == []
 
 
 def test_streaming_sessionization_matches_batch(spark, tmp_path, sf_dir):
@@ -2080,78 +1907,6 @@ def test_streaming_bpe_checkpoint_restart_exactness(spark, tmp_path, sf_dir):
     assert final[("z", "q")].n_words == 1
 
 
-@pytest.mark.tws_worker_spawn_flake
-def test_streaming_hll_tws_matches_aipws_and_batch(spark, tmp_path, sf_dir):
-    """Typed-state (transformWithStateInPandas) HLL == the portable
-    applyInPandasWithState twin == the one-shot python reference, on the
-    same 3-batch split: all three share the hash/register/estimator
-    recipe, so registers — and therefore estimates — must be
-    bit-identical, extending the Spark-4 typed-state surface from the
-    join to the sketch family."""
-    from kafka_streams_one_to_many_join_spark.model import load_table
-    from kafka_streams_one_to_many_join_spark.streaming import (
-        streaming_hll_distinct,
-        streaming_hll_distinct_tws,
-    )
-    from kafka_streams_one_to_many_join_spark.streaming.join_tws import HAS_TWS
-    from kafka_streams_one_to_many_join_spark.streaming.sketch import (
-        hll_estimate,
-        hll_register,
-    )
-
-    if not HAS_TWS:
-        pytest.skip("transformWithStateInPandas needs Spark>=4 + protobuf")
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("event_type").cast("string"), F.col("user_id").cast("string")
-    )
-    rows = [(r[0], r[1]) for r in ev.limit(3000).collect()]
-    schema = "event_type string, user_id string"
-    os.makedirs(f"{tmp_path}/ev", exist_ok=True)
-    third = (len(rows) + 2) // 3
-    for i in range(3):
-        spark.createDataFrame(
-            rows[i * third : (i + 1) * third], schema
-        ).coalesce(1).write.mode("append").parquet(f"{tmp_path}/ev")
-        stamp_batch_mtimes(f"{tmp_path}/ev")
-
-    finals = {}
-    for name, op in [
-        ("hlltws", streaming_hll_distinct_tws),
-        ("hllaipws", streaming_hll_distinct),
-    ]:
-        stream = read_stream(
-            spark, "parquet", f"{tmp_path}/ev",
-            schema=spark.createDataFrame([], schema).schema,
-            maxFilesPerTrigger="1",
-        )
-        est = op(stream, "event_type", "user_id")
-        q = write_stream(
-            est, "memory", query_name=name, output_mode="update",
-            checkpoint=f"{tmp_path}/cp_{name}",
-        )
-        q.processAllAvailable()
-        q.stop()
-        final = {}
-        for r in spark.sql(f"select * from {name}").collect():
-            if r.key not in final or r.n_seen > final[r.key][0]:
-                final[r.key] = (r.n_seen, r.hll_estimate)
-        finals[name] = final
-
-    assert finals["hlltws"] == finals["hllaipws"]
-    ref_regs: dict[str, list[int]] = {}
-    ref_n: dict[str, int] = {}
-    for et, uid in rows:
-        regs = ref_regs.setdefault(et, [0] * 256)
-        b, rho = hll_register(uid)
-        regs[b] = max(regs[b], rho)
-        ref_n[et] = ref_n.get(et, 0) + 1
-    assert set(finals["hlltws"]) == set(ref_regs)
-    for et, (n, est_v) in finals["hlltws"].items():
-        assert n == ref_n[et]
-        assert est_v == hll_estimate(ref_regs[et]), et
-
-
 def test_streaming_minhash_lsh_checkpoint_restart(spark, tmp_path):
     """Kill-and-resume exactness for the streaming MinHash-LSH twin — the
     last restart-unproven stateful operator: each input batch is processed
@@ -2399,84 +2154,6 @@ def test_streaming_lsh_topk_matches_batch_and_restarts(spark, tmp_path, sf_dir):
     assert finalize(spark.read.parquet(f"{tmp_path}/out2").collect()) == expected
 
 
-@pytest.mark.tws_worker_spawn_flake
-def test_streaming_lsh_topk_tws_matches_aipws_and_batch(spark, tmp_path, sf_dir):
-    """Typed-state (transformWithStateInPandas) streaming ANN == the
-    portable applyInPandasWithState twin == batch lsh_topk, on the same
-    3-batch split: candidate generation and the top-k fold are shared
-    code between the twins, so the final tables must be bit-identical —
-    extending the Spark-4 typed-state surface from the join and the
-    sketch family to similarity search."""
-    from kafka_streams_one_to_many_join_spark.functions.similarity import (
-        lsh_topk,
-        seeded_planes,
-    )
-    from kafka_streams_one_to_many_join_spark.model import load_table
-    from kafka_streams_one_to_many_join_spark.streaming import (
-        streaming_lsh_topk,
-        streaming_lsh_topk_tws,
-    )
-    from kafka_streams_one_to_many_join_spark.streaming.join_tws import HAS_TWS
-
-    if not HAS_TWS:
-        pytest.skip("transformWithStateInPandas needs Spark>=4 + protobuf")
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    dim = len(emb.select("embedding").first()[0])
-    planes = seeded_planes(8, dim, 7)
-    expected = {
-        (r.query_id, r.vec_id, r.sim, r.rank)
-        for r in lsh_topk(emb, queries, planes, k=10, probe_hamming=1).collect()
-    }
-
-    rows = [(r.vec_id, list(r.embedding)) for r in emb.collect()]
-    schema = "vec_id long, embedding array<float>"
-    os.makedirs(f"{tmp_path}/vecs", exist_ok=True)
-    third = (len(rows) + 2) // 3
-    for i in range(3):
-        spark.createDataFrame(
-            rows[i * third : (i + 1) * third], schema
-        ).coalesce(1).write.mode("append").parquet(f"{tmp_path}/vecs")
-        stamp_batch_mtimes(f"{tmp_path}/vecs")
-
-    def finalize(collected):
-        latest: dict = {}
-        for r in collected:
-            if r.query_id not in latest or r.n_seen > latest[r.query_id][0]:
-                latest[r.query_id] = (r.n_seen, [])
-            if r.n_seen == latest[r.query_id][0]:
-                latest[r.query_id][1].append(
-                    (r.query_id, r.vec_id, r.sim, r.rank)
-                )
-        return {t for _, rs in latest.values() for t in rs}
-
-    finals = {}
-    for variant, make in (
-        ("tws", lambda st: streaming_lsh_topk_tws(
-            st, queries, planes, k=10, probe_hamming=1)),
-        ("aipws", lambda st: streaming_lsh_topk(
-            st, queries, planes, k=10, probe_hamming=1)),
-    ):
-        stream = read_stream(
-            spark, "parquet", f"{tmp_path}/vecs",
-            schema=spark.createDataFrame([], schema).schema,
-            maxFilesPerTrigger="1",
-        )
-        q = write_stream(
-            make(stream), "memory", query_name=f"ann_{variant}",
-            output_mode="update", checkpoint=f"{tmp_path}/cp_{variant}",
-        )
-        q.processAllAvailable()
-        q.stop()
-        finals[variant] = finalize(
-            spark.sql(f"select * from ann_{variant}").collect()
-        )
-    assert finals["tws"] == finals["aipws"] == expected
-
-
 def test_ann_topk_state_ttl_expires(spark, tmp_path):
     """Opt-in TTL on the streaming ANN top-k state: a query whose top-k
     went unrefreshed past the horizon restarts cold (sliding-corpus
@@ -2539,73 +2216,6 @@ def test_ann_topk_state_ttl_expires(spark, tmp_path):
     expired = run("annttl", ttl_ms=400)
     assert all(r.n_seen == 1 for r in expired), expired  # never merged
     assert any(r.vec_id == 2 for r in expired), expired  # rebuilt cold
-
-
-@pytest.mark.tws_worker_spawn_flake
-def test_streaming_lsh_topk_tws_checkpoint_restart(spark, tmp_path, sf_dir):
-    """First checkpoint-restart proof for the TYPED-STATE backend: the
-    TWS ANN twin's ValueState (RocksDB typed state, protobuf-encoded)
-    must recover across a planned restart — fresh query instance per
-    micro-batch on the shared checkpoint, append snapshots to a file
-    sink, final table equal to batch lsh_topk bit-for-bit.  The portable
-    twins' restart tests exercise applyInPandasWithState's state
-    encoding; this one pins transformWithStateInPandas' own recovery
-    path."""
-    from kafka_streams_one_to_many_join_spark.functions.similarity import (
-        lsh_topk,
-        seeded_planes,
-    )
-    from kafka_streams_one_to_many_join_spark.model import load_table
-    from kafka_streams_one_to_many_join_spark.streaming import (
-        streaming_lsh_topk_tws,
-    )
-    from kafka_streams_one_to_many_join_spark.streaming.join_tws import HAS_TWS
-
-    if not HAS_TWS:
-        pytest.skip("transformWithStateInPandas needs Spark>=4 + protobuf")
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    dim = len(emb.select("embedding").first()[0])
-    planes = seeded_planes(8, dim, 7)
-    expected = {
-        (r.query_id, r.vec_id, r.sim, r.rank)
-        for r in lsh_topk(emb, queries, planes, k=10, probe_hamming=1).collect()
-    }
-
-    rows = [(r.vec_id, list(r.embedding)) for r in emb.collect()]
-    schema = "vec_id long, embedding array<float>"
-    tmp = str(tmp_path)
-    os.makedirs(f"{tmp}/vecs", exist_ok=True)
-    half = (len(rows) + 1) // 2
-    for chunk in (rows[:half], rows[half:]):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{tmp}/vecs")
-        stream = read_stream(
-            spark, "parquet", f"{tmp}/vecs",
-            schema=spark.createDataFrame([], schema).schema,
-        )
-        topk = streaming_lsh_topk_tws(
-            stream, queries, planes, k=10, probe_hamming=1,
-            output_mode="append",
-        )
-        q = write_stream(
-            topk, "parquet", path=f"{tmp}/out",
-            checkpoint=f"{tmp}/cp", trigger_available_now=True,
-            query_name="anntwsrst",
-        )
-        q.awaitTermination()
-    latest: dict = {}
-    for r in spark.read.parquet(f"{tmp}/out").collect():
-        if r.query_id not in latest or r.n_seen > latest[r.query_id][0]:
-            latest[r.query_id] = (r.n_seen, [])
-        if r.n_seen == latest[r.query_id][0]:
-            latest[r.query_id][1].append((r.query_id, r.vec_id, r.sim, r.rank))
-    got = {t for _, rs in latest.values() for t in rs}
-    assert got == expected
 
 
 def test_streaming_multimodal_ingest_resizes_binary_files(spark, tmp_path):
