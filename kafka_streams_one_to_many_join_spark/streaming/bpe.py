@@ -35,13 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_streams_one_to_many_join_spark.streaming.keyed import keyed_state
+
 
 def streaming_word_deltas(
     docs: DataFrame, text_col: str = "text", token_mode: str = "ascii"
 ) -> DataFrame:
     """Stage 1: (word, batch occurrence count, first-ever-seen flag) per
     micro-batch.  Keyed state = one flag per vocabulary word."""
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType,
         LongType,
@@ -63,24 +64,13 @@ def streaming_word_deltas(
     )
     state_schema = StructType([StructField("seen", LongType(), True)])
 
-    def fn(key, pdfs, state):
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
+    def step(w, state, pdfs):
+        n = sum(len(pdf) for pdf in pdfs)
         if n == 0:
-            yield pd.DataFrame([], columns=["w", "d_count", "is_new"])
-            return
-        is_new = not state.exists
-        state.update((1,))
-        yield pd.DataFrame([{"w": key[0], "d_count": n, "is_new": is_new}])
+            return None, []
+        return (1,), [(w, n, state is None)]
 
-    return words.groupBy("w").applyInPandasWithState(
-        fn,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return keyed_state(words, "w", step, output_schema, state_schema)
 
 
 def streaming_bpe_pair_totals(deltas: DataFrame) -> DataFrame:

@@ -17,29 +17,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from kafka_streams_one_to_many_join_spark.streaming.keyed import keyed_state
+
 
 def streaming_dedup(
     events: DataFrame,
     keys: list[str],
     ts_col: str | None = None,
     watermark: str = "10 minutes",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """First occurrence per key wins, duplicates dropped exactly.
 
     With ``ts_col`` the watermark bounds state; duplicate keys arriving
     after the watermark passed their first occurrence are NOT dropped —
     the deliberate trade for bounded state at 100 TB/day stream volume.
-    ``shuffle_partitions``: opt-in latency mode — per-micro-batch latency
-    scales with the stateful partition count, not batch rows (see
-    streaming/latency.py for the measurement and the checkpoint-pinning
-    contract); default None keeps the session setting.
     """
-    from kafka_streams_one_to_many_join_spark.streaming.latency import (
-        apply_shuffle_partitions,
-    )
-
-    events = apply_shuffle_partitions(events, shuffle_partitions)
     if ts_col is not None:
         events = events.withWatermark(ts_col, watermark)
     return events.dropDuplicates(keys)
@@ -50,16 +42,9 @@ def streaming_dedup_within_watermark(
     keys: list[str],
     ts_col: str,
     watermark: str = "10 minutes",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Dedup duplicates that arrive within the watermark delay window —
-    at-least-once delivery repair with guaranteed state expiry.
-    ``shuffle_partitions``: opt-in latency mode (streaming/latency.py)."""
-    from kafka_streams_one_to_many_join_spark.streaming.latency import (
-        apply_shuffle_partitions,
-    )
-
-    events = apply_shuffle_partitions(events, shuffle_partitions)
+    at-least-once delivery repair with guaranteed state expiry."""
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
 
 
@@ -79,7 +64,6 @@ def streaming_minhash_lsh_pairs(
     seed: int = 11,
     ttl_ms: int | None = None,
     max_bucket_size: int | None = None,
-    shuffle_partitions: int | None = None,
     token_mode: str = "ascii",
     shingle_unit: str = "word",
 ) -> DataFrame:
@@ -146,13 +130,11 @@ def streaming_minhash_lsh_pairs(
     division the reference draws between its in-flight join and its
     store upserts/deletes (DemoApp.scala:224-230).
     """
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
         LongType,
-        StringType,
         StructField,
         StructType,
     )
@@ -163,11 +145,6 @@ def streaming_minhash_lsh_pairs(
         minhash_coeffs,
     )
 
-    from kafka_streams_one_to_many_join_spark.streaming.latency import (
-        apply_shuffle_partitions,
-    )
-
-    docs = apply_shuffle_partitions(docs, shuffle_partitions)
     rows = num_hashes // bands
     a, b = minhash_coeffs(num_hashes, seed)
     hashes = (
@@ -218,17 +195,12 @@ def streaming_minhash_lsh_pairs(
         ]
     )
 
-    def fn(key, pdfs, state):
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame([], columns=["doc_a", "doc_b", "jaccard"])
-            return
-        known_ids, known_sets = (
-            ([int(x) for x in state.get[0]], [set(int(h) for h in s) for s in state.get[1]])
-            if state.exists
-            else ([], [])
+    def step(bucket, state, pdfs):
+        known = (
+            {int(d): {int(h) for h in s} for d, s in zip(*state)}
+            if state is not None
+            else {}
         )
-        known = dict(zip(known_ids, known_sets))
         out = []
         for pdf in pdfs:
             for doc_id, hs in zip(pdf["doc_id"], pdf["_hs"]):
@@ -248,18 +220,10 @@ def streaming_minhash_lsh_pairs(
                         lo, hi = sorted((doc_id, other_id))
                         out.append((lo, hi, round(jac, 6)))
                 known[doc_id] = hset
-        state.update((list(known), [sorted(s) for s in known.values()]))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=["doc_a", "doc_b", "jaccard"])
+        return (list(known), [sorted(s) for s in known.values()]), out
 
-    return banded.groupBy("bucket").applyInPandasWithState(
-        fn,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if ttl_ms is not None else "NoTimeout",
+    return keyed_state(
+        banded, "bucket", step, output_schema, state_schema, ttl_ms=ttl_ms
     )
 
 
@@ -285,7 +249,7 @@ def segment_delta_transition(
     new: dict[int, int],
 ) -> tuple[list[tuple[int, int, int]], tuple[int, int | None, int]]:
     """The pure threshold-crossing algebra of stage 1, lifted out of the
-    stateful closure so it can be property-tested exhaustively against a
+    stateful step so it can be property-tested exhaustively against a
     brute-force batch reference (tests/test_properties.py): given the
     O(1) state (occ, holder_id, holder_k) and this batch's new per-doc
     occurrence counts, return the (doc_id, d_segments, d_dup) emissions
@@ -308,7 +272,6 @@ def streaming_segment_dup_deltas(
     id_col: str = "doc_id",
     width: int = 10,
     ttl_ms: int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Stage 1: per segment-hash keyed state → (doc_id, d_segments, d_dup)
     deltas, append semantics.
@@ -350,12 +313,6 @@ def streaming_segment_dup_deltas(
     maintenance, the division pinned end-to-end for the band index in
     tests/test_segment_maintenance.py.
     """
-    from kafka_streams_one_to_many_join_spark.streaming.latency import (
-        apply_shuffle_partitions,
-    )
-
-    docs = apply_shuffle_partitions(docs, shuffle_partitions)
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         LongType,
@@ -392,21 +349,14 @@ def streaming_segment_dup_deltas(
         ]
     )
 
-    def fn(key, pdfs, state):
-        if ttl_ms is not None and state.hasTimedOut:
-            # opt-in sliding-corpus semantics: a segment idle past the TTL
-            # is forgotten — retroactive flips older than the TTL horizon
-            # are deliberately missed
-            state.remove()
-            yield pd.DataFrame([], columns=["doc_id", "d_segments", "d_dup"])
-            return
+    def step(seg_h, state, pdfs):
         occ, holder_id, holder_k = (
             (
-                int(state.get[0]),
-                None if state.get[1] is None else int(state.get[1]),
-                int(state.get[2] or 0),
+                int(state[0]),
+                None if state[1] is None else int(state[1]),
+                int(state[2] or 0),
             )
-            if state.exists
+            if state is not None
             else (0, None, 0)
         )
         new: dict[int, int] = {}
@@ -417,22 +367,12 @@ def streaming_segment_dup_deltas(
                     continue
                 new[d] = new.get(d, 0) + 1
         if not new:
-            if ttl_ms is not None and state.exists:
-                state.setTimeoutDuration(ttl_ms)  # re-arm: invocation clears it
-            yield pd.DataFrame([], columns=["doc_id", "d_segments", "d_dup"])
-            return
+            return None, []
         out, next_state = segment_delta_transition(occ, holder_id, holder_k, new)
-        state.update(next_state)
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(out, columns=["doc_id", "d_segments", "d_dup"])
+        return next_state, out
 
-    return segs.groupBy("seg_h").applyInPandasWithState(
-        fn,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if ttl_ms is not None else "NoTimeout",
+    return keyed_state(
+        segs, "seg_h", step, output_schema, state_schema, ttl_ms=ttl_ms
     )
 
 
@@ -447,7 +387,6 @@ def streaming_segment_dup_totals(
     monotonically non-decreasing, so the latest row per doc is the max)
     — required for a file sink, and for checkpoint recovery in the
     restart test (memory sinks cannot recover)."""
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType,
         DoubleType,
@@ -472,31 +411,14 @@ def streaming_segment_dup_totals(
         ]
     )
 
-    def fn(key, pdfs, state):
-        n_seg, n_dup = (
-            (int(state.get[0]), int(state.get[1])) if state.exists else (0, 0)
-        )
+    def step(doc_id, state, pdfs):
+        n_seg, n_dup = (int(state[0]), int(state[1])) if state is not None else (0, 0)
         for pdf in pdfs:
             n_seg += int(pdf["d_segments"].sum())
             n_dup += int(pdf["d_dup"].sum())
-        state.update((n_seg, n_dup))
         frac = round(n_dup / n_seg, 6) if n_seg else 0.0
-        yield pd.DataFrame(
-            [
-                {
-                    "doc_id": key[0],
-                    "n_segments": n_seg,
-                    "n_dup_segments": n_dup,
-                    "dup_frac": frac,
-                    "keep": frac <= 0.5,
-                }
-            ]
-        )
+        return (n_seg, n_dup), [(doc_id, n_seg, n_dup, frac, frac <= 0.5)]
 
-    return deltas.groupBy("doc_id").applyInPandasWithState(
-        fn,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf="NoTimeout",
+    return keyed_state(
+        deltas, "doc_id", step, output_schema, state_schema, output_mode=output_mode
     )

@@ -1,8 +1,9 @@
 """Stateful streaming one-to-many join with table semantics.
 
 The reference implements this as two Kafka Streams transformers sharing two
-RocksDB stores (DemoApp.scala:187-298).  Here it is two keyed stateful
-operators (``applyInPandasWithState``), mirroring the topology:
+RocksDB stores (DemoApp.scala:187-298).  Here it is two step functions on
+the package's one keyed-state recipe (streaming/keyed.py), mirroring the
+topology:
 
   stage 1 — car_move_detection, keyed by car_id (reference O1+O3,
       DemoApp.scala:86-90,116-130): per-car ValueState of the last zone;
@@ -23,11 +24,10 @@ operators (``applyInPandasWithState``), mirroring the topology:
 
 Between the stages sits a shuffle on zone_id — Spark's in-engine version of
 the reference's co-partitioning `through` topic (O5, DemoApp.scala:90),
-with no broker round trip.  Spark rejects two ``applyInPandasWithState``
-operators in one streaming query (``AnalysisException: Multiple
-applyInPandasWithStates are not supported``), so the topology helper in the
-tests materializes stage 1 through a parquet directory — which is *exactly*
-what the reference's `through` topic does, minus the broker.
+with no broker round trip.  Spark allows one keyed-state operator per
+streaming query (streaming/keyed.py), so the topology helper in the tests
+materializes stage 1 through a parquet directory — which is *exactly* what
+the reference's `through` topic does, minus the broker.
 
 Ordering: the reference relies on per-partition arrival order with no
 timestamps (DemoApp.scala:62-63).  Here each micro-batch is processed in
@@ -41,9 +41,9 @@ O(fan-out) for zone events — identical asymptotics to the reference
 (BASELINE.md "Per-update join cost").  State columns are array-typed (no
 string re-serialization per batch).
 
-Throughput model: the state functions built by ``_make_move_fn`` /
-``_make_join_fn`` iterate events row-by-row in Python.  That is the
-faithful-semantics cost — the operator is an arrival-order state machine
+Throughput model: the step functions ``_move_step`` / ``_join_step``
+iterate events row-by-row in Python.  That is the faithful-semantics
+cost — the operator is an arrival-order state machine
 (each event's emission depends on state mutated by the previous event of
 the same key), so it cannot be vectorized without changing the emission
 contract.  Per-event cost is constant and small; aggregate throughput
@@ -61,7 +61,6 @@ with a fresh checkpointLocation) when upgrading across that change.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -75,6 +74,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from kafka_streams_one_to_many_join_spark.streaming.keyed import keyed_state
 
 CAR_MOVE_EVENT_STREAM = StructType(
     [
@@ -116,74 +117,36 @@ _JOIN_STATE = StructType(
 )
 
 
-def _make_move_fn(ttl_ms: int | None = None):
-    """Per-car move detection, optionally with a processing-time TTL on
-    the last-zone state (default None = the reference's keep-forever
-    semantics).  An expired car's next event is treated as its first —
-    arrive only, no leave row — the same cold-start contract as the
-    join-side TTL."""
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        (car_id,) = key
-        last_zone, _last_fuel = state.get if state.exists else (None, None)
-        out: list[dict] = []
-        for pdf in pdfs:
-            for row in pdf.sort_values("seq").itertuples(index=False):
-                # arrive at the new zone (DemoApp.scala:127)
-                out.append(
-                    dict(car_id=car_id, zone_id=int(row.to_zone_id), is_arriving=True,
-                         emit_rank=0, fuel_level=float(row.fuel_level), seq=int(row.seq))
-                )
-                # leave the previous zone if any — even if unchanged (quirk,
-                # DemoApp.scala:116-119,129)
-                if last_zone is not None:
-                    out.append(
-                        dict(car_id=car_id, zone_id=int(last_zone), is_arriving=False,
-                             emit_rank=1, fuel_level=float(row.fuel_level), seq=int(row.seq))
-                    )
-                last_zone = int(row.to_zone_id)
-                _last_fuel = float(row.fuel_level)
-        state.update((last_zone, _last_fuel))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        if out:
-            yield pd.DataFrame(out)
-
-    return fn
+def _move_step(car_id: int, state: tuple | None, pdfs: Iterator[pd.DataFrame]):
+    """Per-car move detection: each event emits an arrive row and, if the
+    car had a zone, a leave row for it.  Under a TTL an expired car's next
+    event is treated as its first — arrive only, no leave row — the same
+    cold-start contract as the join-side TTL."""
+    last_zone, last_fuel = state if state is not None else (None, None)
+    out: list[tuple] = []
+    for pdf in pdfs:
+        for row in pdf.sort_values("seq").itertuples(index=False):
+            zone, fuel, seq = int(row.to_zone_id), float(row.fuel_level), int(row.seq)
+            # arrive at the new zone (DemoApp.scala:127)
+            out.append((car_id, zone, True, 0, fuel, seq))
+            # leave the previous zone if any — even if unchanged (quirk,
+            # DemoApp.scala:116-119,129)
+            if last_zone is not None:
+                out.append((car_id, int(last_zone), False, 1, fuel, seq))
+            last_zone, last_fuel = zone, fuel
+    return (last_zone, last_fuel), out
 
 
-def car_move_detection(
-    car_events: DataFrame,
-    ttl_ms: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
+def car_move_detection(car_events: DataFrame, ttl_ms: int | None = None) -> DataFrame:
     """Streaming O1+O3: car events → arrive/leave CarMoveEvents.
 
     Input columns: seq, car_id, to_zone_id, fuel_level.
     ``ttl_ms``: opt-in processing-time state TTL; default None keeps the
     reference's keep-forever semantics.
-    ``shuffle_partitions``: opt-in latency mode — per-micro-batch
-    latency scales with the stateful operator's partition count, not
-    batch rows (measured p50 2.42 s at 8 vs 11.4 s at 32 on identical
-    batches; see streaming/latency.py for the checkpoint-pinning and
-    session-scope contract).  Default None keeps the session setting.
     """
-    from kafka_streams_one_to_many_join_spark.streaming.latency import (
-        apply_shuffle_partitions,
-    )
-
-    car_events = apply_shuffle_partitions(car_events, shuffle_partitions)
-    return car_events.groupBy("car_id").applyInPandasWithState(
-        _make_move_fn(ttl_ms),
-        outputStructType=CAR_MOVE_EVENT_STREAM,
-        stateStructType=_MOVE_STATE,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if ttl_ms is not None else "NoTimeout",
+    return keyed_state(
+        car_events, "car_id", _move_step, CAR_MOVE_EVENT_STREAM, _MOVE_STATE,
+        ttl_ms=ttl_ms,
     )
 
 
@@ -215,87 +178,51 @@ def tag_zone_events(zone_events: DataFrame) -> DataFrame:
     )
 
 
-def _make_join_fn(ttl_ms: int | None = None):
-    """The per-zone state machine, optionally with a processing-time TTL.
+def _join_step(zone_id: int, state: tuple | None, pdfs: Iterator[pd.DataFrame]):
+    """The per-zone state machine.
 
-    ``ttl_ms=None`` (default) reproduces the reference exactly: state
-    lives forever (DemoApp.scala:182-185,251-254 never expire).  With a
-    TTL, a zone whose key receives no events for ``ttl_ms`` of processing
-    time has its state dropped at the next micro-batch — the opt-in bound
-    on the one unbounded resource here (keyed state for never-revisited
+    Without a TTL this reproduces the reference exactly: state lives
+    forever (DemoApp.scala:182-185,251-254 never expire).  With one, a
+    zone whose key receives no events for ``ttl_ms`` of processing time
+    has its state dropped at the next micro-batch — the opt-in bound on
+    the one unbounded resource here (keyed state for never-revisited
     zones) that a 100 TB deployment needs.  Expiry is an EXTENSION of the
-    reference semantics: a later car arriving in an expired zone re-probes
-    against nothing (no emission) until the next zone event, identical to
-    a cold start for that key.
+    reference semantics: a later car arriving in an expired zone
+    re-probes against nothing (no emission) until the next zone event,
+    identical to a cold start for that key.
     """
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if ttl_ms is not None and state.hasTimedOut:
-            # key silent past the TTL: drop state, emit nothing
-            state.remove()
-            return
-        (zone_id,) = key
-        if state.exists:
-            pollution, ids, fuels = state.get
-            cars: dict[int, float] = (
-                {int(i): float(f) for i, f in zip(ids, fuels)} if ids is not None else {}
-            )
-        else:
-            pollution, cars = None, {}
-        out: list[dict] = []
-        for pdf in pdfs:
-            for row in pdf.sort_values(["seq", "emit_rank"]).itertuples(index=False):
-                if row.kind == "car":
-                    car_id = int(row.car_id)
-                    if bool(row.is_arriving):
-                        # upsert + probe (DemoApp.scala:210-222)
-                        cars[car_id] = float(row.fuel_level)
-                        if pollution is not None:
-                            out.append(dict(car_id=car_id, zone_id=zone_id,
-                                            fuel_level=float(row.fuel_level),
-                                            pollution_level=float(pollution)))
-                    else:
-                        # delete, no retraction (DemoApp.scala:224-230)
-                        cars.pop(car_id, None)
+    pollution, ids, fuels = state if state is not None else (None, None, None)
+    cars: dict[int, float] = (
+        {int(i): float(f) for i, f in zip(ids, fuels)} if ids is not None else {}
+    )
+    out: list[tuple] = []
+    for pdf in pdfs:
+        for row in pdf.sort_values(["seq", "emit_rank"]).itertuples(index=False):
+            if row.kind == "car":
+                car_id = int(row.car_id)
+                if bool(row.is_arriving):
+                    # upsert + probe (DemoApp.scala:210-222)
+                    cars[car_id] = float(row.fuel_level)
+                    if pollution is not None:
+                        out.append((car_id, zone_id, float(row.fuel_level), float(pollution)))
                 else:
-                    # zone upsert + fan-out (DemoApp.scala:279-290)
-                    pollution = float(row.pollution_level)
-                    for car_id, fuel in sorted(cars.items()):
-                        out.append(dict(car_id=car_id, zone_id=zone_id,
-                                        fuel_level=fuel, pollution_level=pollution))
-        state.update((pollution, list(cars.keys()), list(cars.values())))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        if out:
-            yield pd.DataFrame(out)
-
-    return fn
+                    # delete, no retraction (DemoApp.scala:224-230)
+                    cars.pop(car_id, None)
+            else:
+                # zone upsert + fan-out (DemoApp.scala:279-290)
+                pollution = float(row.pollution_level)
+                for car_id, fuel in sorted(cars.items()):
+                    out.append((car_id, zone_id, fuel, pollution))
+    return (pollution, list(cars.keys()), list(cars.values())), out
 
 
-def symmetric_one_to_many_join(
-    tagged: DataFrame,
-    ttl_ms: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
+def symmetric_one_to_many_join(tagged: DataFrame, ttl_ms: int | None = None) -> DataFrame:
     """Streaming O6+O7: tagged union of car-moves and zone events, keyed by
     zone_id, → continuously-refreshed joined rows.
 
-    ``ttl_ms``: opt-in processing-time state TTL (see ``_make_join_fn``);
+    ``ttl_ms``: opt-in processing-time state TTL (see ``_join_step``);
     default None keeps the reference's keep-forever semantics.
-    ``shuffle_partitions``: opt-in latency mode (see car_move_detection
-    and streaming/latency.py); default None keeps the session setting.
     """
-    from kafka_streams_one_to_many_join_spark.streaming.latency import (
-        apply_shuffle_partitions,
-    )
-
-    tagged = apply_shuffle_partitions(tagged, shuffle_partitions)
-    return tagged.groupBy("zone_id").applyInPandasWithState(
-        _make_join_fn(ttl_ms),
-        outputStructType=JOINED_STREAM,
-        stateStructType=_JOIN_STATE,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout" if ttl_ms is not None else "NoTimeout",
+    return keyed_state(
+        tagged, "zone_id", _join_step, JOINED_STREAM, _JOIN_STATE, ttl_ms=ttl_ms
     )

@@ -18,12 +18,10 @@ Scale: state is one row per key, hash-partitioned across executors
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from kafka_streams_one_to_many_join_spark.streaming.keyed import keyed_state
 
 
 def streaming_latest_by_key(
@@ -42,26 +40,14 @@ def streaming_latest_by_key(
     out_schema = StructType([by_name[key]] + [by_name[c] for c in cols])
     state_schema = StructType([by_name[c] for c in cols])
 
-    def fn(
-        key_t: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        cur = tuple(state.get) if state.exists else None
+    def step(k, cur, pdfs):
         out: list[tuple] = []
         for pdf in pdfs:
             for row in pdf.sort_values(ord_col).itertuples(index=False):
                 vals = tuple(getattr(row, c) for c in cols)
                 if cur is None or vals[0] >= cur[0]:
                     cur = vals
-                    out.append(key_t + cur)
-        if cur is not None:
-            state.update(cur)
-        if out:
-            yield pd.DataFrame(out, columns=[key, *cols])
+                    out.append((k, *cur))
+        return cur, out
 
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return keyed_state(events, key, step, out_schema, state_schema)

@@ -17,7 +17,7 @@ Topology (one stateful operator, like every twin in this package):
 2. Cosine re-rank of the matched candidates is the same codegen
    expression as the batch operator (cosine_from_norms, rounded 6) —
    bit-identical similarity values by construction.
-3. The one keyed-state operator (applyInPandasWithState, keyed by
+3. The one keyed-state operator (streaming/keyed.py, keyed by
    query_id) folds candidates into the running top-k: state is the
    (vec_id, sim) arrays of at most k entries plus a monotone n_seen
    candidate counter; each invocation merges (dedup by vec_id — a
@@ -51,6 +51,7 @@ from kafka_streams_one_to_many_join_spark.functions.similarity import (
     norm_expr,
     probe_masks,
 )
+from kafka_streams_one_to_many_join_spark.streaming.keyed import keyed_state
 
 
 def _lsh_candidates(
@@ -164,7 +165,6 @@ def streaming_lsh_topk(
     sliding-corpus ANN.  Default None keeps keep-forever semantics,
     matching the batch operator.
     """
-    import pandas as pd
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -195,50 +195,23 @@ def streaming_lsh_topk(
         ]
     )
 
-    def fn(key, pdfs, state):
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(
-                [], columns=["query_id", "vec_id", "sim", "rank", "n_seen"]
-            )
-            return
-        if state.exists:
-            ids, sims, n_seen = state.get
+    def step(query_id, state, pdfs):
+        if state is not None:
+            ids, sims, n_seen = state
             top = {int(v): float(s) for v, s in zip(ids, sims)}
             n_seen = int(n_seen)
         else:
             top, n_seen = {}, 0
         new, ranked = _fold_topk(top, pdfs, k)
         if not new:
-            if ttl_ms is not None and state.exists:
-                state.setTimeoutDuration(ttl_ms)  # re-arm: invocation clears it
-            yield pd.DataFrame(
-                [], columns=["query_id", "vec_id", "sim", "rank", "n_seen"]
-            )
-            return
+            return None, []
         n_seen += new
-        state.update(
-            ([v for v, _ in ranked], [s for _, s in ranked], n_seen)
-        )
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(
-            [
-                {
-                    "query_id": key[0],
-                    "vec_id": v,
-                    "sim": s,
-                    "rank": r + 1,
-                    "n_seen": n_seen,
-                }
-                for r, (v, s) in enumerate(ranked)
-            ]
+        return (
+            ([v for v, _ in ranked], [s for _, s in ranked], n_seen),
+            [(query_id, v, s, r + 1, n_seen) for r, (v, s) in enumerate(ranked)],
         )
 
-    return candidates.groupBy(query_id_col).applyInPandasWithState(
-        fn,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode=output_mode,
-        timeoutConf="ProcessingTimeTimeout" if ttl_ms is not None else "NoTimeout",
+    return keyed_state(
+        candidates, query_id_col, step, output_schema, state_schema,
+        ttl_ms=ttl_ms, output_mode=output_mode,
     )

@@ -20,16 +20,14 @@ Scale: state is 256 ints per key regardless of stream volume — the
 sketch property that makes per-key cardinality tracking viable on a
 100 TB/day stream.  The only shuffle is the groupBy(key) partitioning
 of incoming events; with a bounded key domain, state is bounded too, so
-no watermark/timeout is needed (add ``timeoutConf`` for unbounded key
-domains).
+no watermark/timeout is needed (an unbounded key domain would pass a
+``ttl_ms`` to ``streaming/keyed.py``).
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -43,6 +41,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from kafka_streams_one_to_many_join_spark.streaming.keyed import keyed_state
 
 _M = 256
 _ALPHA = 0.7213 / (1 + 1.079 / _M)
@@ -83,14 +83,8 @@ def hll_estimate(regs: list[int]) -> float:
     return raw
 
 
-def _hll_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    regs, n = (
-        (list(state.get[0]), int(state.get[1]))
-        if state.exists
-        else ([0] * _M, 0)
-    )
+def _hll_step(key, state, pdfs):
+    regs, n = (list(state[0]), int(state[1])) if state is not None else ([0] * _M, 0)
     for pdf in pdfs:
         for v in pdf["value"]:
             if v is None or (isinstance(v, float) and pd.isna(v)):
@@ -99,10 +93,7 @@ def _hll_fn(
             if rho > regs[bucket]:
                 regs[bucket] = rho
             n += 1
-    state.update((regs, n))
-    yield pd.DataFrame(
-        [{"key": key[0], "n_seen": n, "hll_estimate": hll_estimate(regs)}]
-    )
+    return (regs, n), [(key, n, hll_estimate(regs))]
 
 
 def streaming_hll_distinct(
@@ -119,13 +110,7 @@ def streaming_hll_distinct(
         F.col(key_col).cast("string").alias("key"),
         F.col(value_col).cast("string").alias("value"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _hll_fn,
-        outputStructType=_OUTPUT,
-        stateStructType=_STATE,
-        outputMode=output_mode,
-        timeoutConf="NoTimeout",
-    )
+    return keyed_state(keyed, "key", _hll_step, _OUTPUT, _STATE, output_mode=output_mode)
 
 
 # ---------------------------------------------------------------------------
@@ -191,13 +176,9 @@ def quantile_estimate(counts: list[int], q: float) -> float | None:
     return float(_Q_BINS * _Q_WIDTH)
 
 
-def _quantile_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
+def _quantile_step(key, state, pdfs):
     counts, n = (
-        (list(state.get[0]), int(state.get[1]))
-        if state.exists
-        else ([0] * _Q_BINS, 0)
+        (list(state[0]), int(state[1])) if state is not None else ([0] * _Q_BINS, 0)
     )
     for pdf in pdfs:
         for v in pdf["value"]:
@@ -205,18 +186,9 @@ def _quantile_fn(
                 continue
             counts[quantile_bin(v)] += 1
             n += 1
-    state.update((counts, n))
-    yield pd.DataFrame(
-        [
-            {
-                "key": key[0],
-                "n_seen": n,
-                "p25_sketch": quantile_estimate(counts, 0.25),
-                "p50_sketch": quantile_estimate(counts, 0.5),
-                "p90_sketch": quantile_estimate(counts, 0.9),
-            }
-        ]
-    )
+    return (counts, n), [
+        (key, n, *(quantile_estimate(counts, q) for q in (0.25, 0.5, 0.9)))
+    ]
 
 
 def streaming_quantile_sketch(
@@ -229,12 +201,8 @@ def streaming_quantile_sketch(
         F.col(key_col).cast("string").alias("key"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _quantile_fn,
-        outputStructType=_Q_OUTPUT,
-        stateStructType=_Q_STATE,
-        outputMode=output_mode,
-        timeoutConf="NoTimeout",
+    return keyed_state(
+        keyed, "key", _quantile_step, _Q_OUTPUT, _Q_STATE, output_mode=output_mode
     )
 
 
@@ -304,12 +272,10 @@ def streaming_cms_counts(
     """Per-key running count-min estimates for a fixed probe-token list
     (update semantics: one row per probe per touched key per batch)."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, state, pdfs):
         counters, n = (
-            (list(state.get[0]), int(state.get[1]))
-            if state.exists
+            (list(state[0]), int(state[1]))
+            if state is not None
             else ([0] * (_CMS_D * _CMS_W), 0)
         )
         for pdf in pdfs:
@@ -318,29 +284,16 @@ def streaming_cms_counts(
                     continue
                 cms_update(counters, str(tok))
                 n += 1
-        state.update((counters, n))
-        yield pd.DataFrame(
-            [
-                {
-                    "key": key[0],
-                    "probe": probe,
-                    "n_seen": n,
-                    "cms_est": cms_estimate(counters, probe),
-                }
-                for probe in probes
-            ]
-        )
+        return (counters, n), [
+            (key, probe, n, cms_estimate(counters, probe)) for probe in probes
+        ]
 
     keyed = events.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(token_col).cast("string").alias("token"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn,
-        outputStructType=_CMS_OUTPUT,
-        stateStructType=_CMS_STATE,
-        outputMode=output_mode,
-        timeoutConf="NoTimeout",
+    return keyed_state(
+        keyed, "key", step, _CMS_OUTPUT, _CMS_STATE, output_mode=output_mode
     )
 
 
@@ -396,13 +349,9 @@ def streaming_bloom_filter(
 
     n_words = m // 32
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, state, pdfs):
         words, n = (
-            (list(state.get[0]), int(state.get[1]))
-            if state.exists
-            else ([0] * n_words, 0)
+            (list(state[0]), int(state[1])) if state is not None else ([0] * n_words, 0)
         )
         for pdf in pdfs:
             for v in pdf["value"]:
@@ -412,26 +361,12 @@ def streaming_bloom_filter(
                     w, mask = bloom_word_mask(i, str(v), m)
                     words[w] |= mask
                 n += 1
-        state.update((words, n))
-        yield pd.DataFrame(
-            [
-                {
-                    "key": key[0],
-                    "n_seen": n,
-                    "bits_set": sum(bin(w).count("1") for w in words),
-                    "words": words,
-                }
-            ]
-        )
+        return (words, n), [(key, n, sum(bin(w).count("1") for w in words), words)]
 
     keyed = events.select(
         F.col(key_col).cast("string").alias("key"),
         F.col(value_col).cast("string").alias("value"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn,
-        outputStructType=_BLOOM_OUTPUT,
-        stateStructType=_BLOOM_STATE,
-        outputMode=output_mode,
-        timeoutConf="NoTimeout",
+    return keyed_state(
+        keyed, "key", step, _BLOOM_OUTPUT, _BLOOM_STATE, output_mode=output_mode
     )

@@ -99,7 +99,7 @@ CARRIED_FAMILIES = [
 def main() -> None:
     with open(os.path.join(HERE, "BENCH_FULL.json")) as f:
         now = json.load(f)["queries"]
-    with open(os.path.join(HERE, "BENCH_FULL_r16.json")) as f:
+    with open(os.path.join(HERE, "history", "BENCH_FULL_r16.json")) as f:
         r16 = json.load(f)["queries"]
     carried = {}
     for names, why in CARRIED_FAMILIES:

@@ -376,17 +376,14 @@ if __name__ == "__main__":
             )
         )
         print("symmetric_join done", file=sys.stderr)
-        # the same rows through the constructor's latency knob
-        # (streaming/latency.py): per-batch latency scales with the
-        # stateful partition count, so this line is the knob's measured
-        # face; conf restored for the runs after it
+        # the same rows at 8 shuffle partitions: per-batch latency scales
+        # with the stateful partition count (read at query start and then
+        # pinned in the checkpoint); conf restored for the runs after it
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         out["symmetric_join_lat8"] = _latency_summary(
             _run(
-                lambda st: symmetric_one_to_many_join(
-                    st, shuffle_partitions=8
-                ),
-                f"{tmp}/tagged", tagged.schema, tmp,
-                "symmetric_join_lat8", "append",
+                symmetric_one_to_many_join, f"{tmp}/tagged", tagged.schema,
+                tmp, "symmetric_join_lat8", "append",
             )
         )
         spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
@@ -400,11 +397,11 @@ if __name__ == "__main__":
             )
         )
         print("minhash_pairs_cap16 done", file=sys.stderr)
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         out["minhash_pairs_cap16_lat8"] = _latency_summary(
             _run(
                 lambda st: streaming_minhash_lsh_pairs(
-                    st, threshold=0.7, max_bucket_size=16,
-                    shuffle_partitions=8,
+                    st, threshold=0.7, max_bucket_size=16
                 ),
                 f"{tmp}/docs", docs.schema, tmp, "minhash_cap_lat8", "append",
             )

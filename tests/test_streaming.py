@@ -657,7 +657,7 @@ def _await_input_rows(q, seen, target, timeout=90):
             seen[prog["batchId"]] = prog["numInputRows"]
         if sum(seen.values()) >= target:
             return
-        time.sleep(0.2)
+        time.sleep(0.05)
     raise AssertionError(
         f"processed {sum(seen.values())}/{target} input rows before timeout"
     )
@@ -684,48 +684,80 @@ def _await_cleanup_batch(q, horizon, timeout=60):
             for p in q.recentProgress
         ):
             return
-        time.sleep(0.2)
+        time.sleep(0.05)
     raise AssertionError("no post-horizon cleanup batch committed in time")
 
 
-def _ttl_scenario(spark, tmp_path, make_query, name, batches, cleanup_ttl_ms=None):
-    """Write each batch, wait until it is processed, with a wall-clock gap
-    (>> any TTL under test) between batches; return the sink contents.
+_TTL_MS = 400  # the processing-time TTL every expiry test runs under
 
-    With ``cleanup_ttl_ms`` set, the inter-batch gap additionally waits
-    for a committed no-data cleanup batch past the TTL horizon (see
-    _await_cleanup_batch) — required for timer-based expiry to have
-    actually fired before the next data batch arrives."""
+
+def _publish_batch(spark, src, i, rows, schema):
+    """Write one input file straight from the driver and rename it into
+    place: the file source skips ``.``-names, so it never sees a half
+    written file, and no Spark write job runs per batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = spark.createDataFrame([], schema).schema
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.fieldNames(), row)) for row in rows],
+        schema=to_arrow_schema(struct),
+    )
+    pq.write_table(table, f"{src}/.part-{i}.parquet")
+    os.rename(f"{src}/.part-{i}.parquet", f"{src}/part-{i}.parquet")
+
+
+def _ttl_scenario(
+    spark, tmp_path, make_query, name, batches, ttl_ms,
+    schema=_TAGGED_SCHEMA, output_mode="append", project=tuple,
+):
+    """Run ``make_query(stream, ttl_ms)`` over ``batches``, one file each,
+    waiting until each is processed and then leaving a wall-clock silence
+    past the ``_TTL_MS`` horizon before the next; return the sink rows
+    through ``project``, sorted.
+
+    With ``ttl_ms`` set, each silence also waits for a committed no-data
+    cleanup batch past the horizon (see _await_cleanup_batch) — required
+    for timer-based expiry to have actually fired before the next data
+    batch arrives.  The keep-forever control (``ttl_ms=None``) gets the
+    same silence without it."""
     src = f"{tmp_path}/src_{name}"
     os.makedirs(src, exist_ok=True)
     stream = read_stream(
         spark, "parquet", src,
-        schema=spark.createDataFrame([], _TAGGED_SCHEMA).schema,
+        schema=spark.createDataFrame([], schema).schema,
     )
-    q = write_stream(
-        make_query(stream), "memory", query_name=name,
-        checkpoint=f"{tmp_path}/cp_{name}",
-    )
+    # every micro-batch (cleanup batches too) opens and commits the state
+    # store of each shuffle partition; the one-key scenarios need two.  The
+    # query clones the session conf at start, so restoring it right after
+    # leaves the running query untouched.
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        q = write_stream(
+            make_query(stream, ttl_ms), "memory", query_name=name,
+            output_mode=output_mode, checkpoint=f"{tmp_path}/cp_{name}",
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     seen: dict = {}
     written = 0
     try:
-        for batch in batches:
-            spark.createDataFrame(batch, _TAGGED_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
+        for i, batch in enumerate(batches):
+            if i:
+                horizon = processed_at + _TTL_MS / 1000 + 0.3
+                if ttl_ms is not None:
+                    _await_cleanup_batch(q, horizon)
+                else:
+                    time.sleep(max(0.0, horizon - time.time()))
+            _publish_batch(spark, src, i, batch, schema)
             written += len(batch)
             _await_input_rows(q, seen, written)
             processed_at = time.time()
-            if cleanup_ttl_ms is not None:
-                _await_cleanup_batch(
-                    q, processed_at + cleanup_ttl_ms / 1000 + 0.3
-                )
-            else:
-                time.sleep(1.5)  # real wall-clock gap >> the 400ms TTL
-        # one extra beat so the last batch's sink commit is visible
-        time.sleep(0.5)
+        # a batch shows up in recentProgress only after its sink commit
         return sorted(
-            tuple(r) for r in spark.sql(f"select * from {name}").collect()
+            project(r) for r in spark.sql(f"select * from {name}").collect()
         )
     finally:
         q.stop()
@@ -741,15 +773,17 @@ def test_join_state_ttl_expires_silent_zones(spark, tmp_path):
         [_zrow(0, 100, 50.0), _crow(1, 100, 1, 10.0)],
         [_crow(2, 100, 2, 20.0)],
     ]
-    forever = _ttl_scenario(
-        spark, tmp_path, lambda st: symmetric_one_to_many_join(st),
-        "ttl_off", batches,
-    )
+
+    def run(name, ttl_ms):
+        return _ttl_scenario(
+            spark, tmp_path,
+            lambda st, ttl: symmetric_one_to_many_join(st, ttl_ms=ttl),
+            name, batches, ttl_ms,
+        )
+
+    forever = run("ttl_off", None)
     assert forever == [(1, 100, 10.0, 50.0), (2, 100, 20.0, 50.0)]
-    expiring = _ttl_scenario(
-        spark, tmp_path, lambda st: symmetric_one_to_many_join(st, ttl_ms=400),
-        "ttl_on", batches, cleanup_ttl_ms=400,
-    )
+    expiring = run("ttl_on", _TTL_MS)
     assert expiring == [(1, 100, 10.0, 50.0)]
 
 
@@ -1447,55 +1481,22 @@ def test_segment_dedup_state_ttl_expires(spark, tmp_path):
     seg = lambda tag: " ".join(f"{tag}{i}" for i in range(10))
     b1 = [(1, seg("a"))]
     b2 = [(2, seg("a"))]
-    schema = "doc_id long, text string"
-
-    def run(name, ttl_ms):
-        src = f"{tmp_path}/src_{name}"
-        os.makedirs(src, exist_ok=True)
-        stream = read_stream(
-            spark, "parquet", src,
-            schema=spark.createDataFrame([], schema).schema,
-        )
-        deltas = streaming_segment_dup_deltas(stream, ttl_ms=ttl_ms)
-        q = write_stream(
-            deltas, "memory", query_name=name, checkpoint=f"{tmp_path}/cp_{name}",
-        )
-        seen: dict = {}
-        written = 0
-        try:
-            for batch in (b1, b2):
-                spark.createDataFrame(batch, schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(src)
-                written += len(batch)
-                _await_input_rows(q, seen, written)
-                processed_at = time.time()
-                if ttl_ms is not None:
-                    _await_cleanup_batch(q, processed_at + ttl_ms / 1000 + 0.3)
-                else:
-                    time.sleep(1.5)
-            time.sleep(0.5)
-            return {
-                (r.doc_id,): (r.d_segments, r.d_dup)
-                for r in spark.sql(f"select * from {name}").collect()
-            }
-        finally:
-            q.stop()
-
-    run("segttl", ttl_ms=400)
-    run("segkeep", ttl_ms=None)
 
     # doc 1 emits (1, 0) on arrival and a retro (0, 1) delta as separate
     # sink rows — delta semantics, so assert on SUMS per doc
-    def totals(rows_name):
+    def totals(name, ttl_ms):
         agg = {}
-        for r in spark.sql(f"select * from {rows_name}").collect():
-            s, d = agg.get(r.doc_id, (0, 0))
-            agg[r.doc_id] = (s + r.d_segments, d + r.d_dup)
+        for doc_id, d_segments, d_dup in _ttl_scenario(
+            spark, tmp_path,
+            lambda st, ttl: streaming_segment_dup_deltas(st, ttl_ms=ttl),
+            name, [b1, b2], ttl_ms, schema="doc_id long, text string",
+        ):
+            s, d = agg.get(doc_id, (0, 0))
+            agg[doc_id] = (s + d_segments, d + d_dup)
         return agg
 
-    t_control = totals("segkeep")
-    t_expired = totals("segttl")
+    t_expired = totals("segttl", _TTL_MS)
+    t_control = totals("segkeep", None)
     assert t_control[1] == (1, 1), t_control   # retro-flipped
     assert t_control[2] == (1, 1), t_control   # arrived duplicated
     assert t_expired[1] == (1, 0), t_expired   # state forgot — no flip
@@ -1512,45 +1513,19 @@ def test_minhash_state_ttl_expires(spark, tmp_path):
     text = "the quick brown fox jumps over the lazy dog again and again"
     b1 = [(1, text)]
     b2 = [(2, text + " tail")]  # near-dup of doc 1, shares most shingles
-    schema = "doc_id long, text string"
 
     def run(name, ttl_ms):
-        src = f"{tmp_path}/src_{name}"
-        os.makedirs(src, exist_ok=True)
-        stream = read_stream(
-            spark, "parquet", src,
-            schema=spark.createDataFrame([], schema).schema,
-        )
-        pairs = sd.streaming_minhash_lsh_pairs(
-            stream, threshold=0.5, ttl_ms=ttl_ms
-        )
-        q = write_stream(
-            pairs, "memory", query_name=name, checkpoint=f"{tmp_path}/cp_{name}",
-        )
-        seen: dict = {}
-        written = 0
-        try:
-            for batch in (b1, b2):
-                spark.createDataFrame(batch, schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(src)
-                written += len(batch)
-                _await_input_rows(q, seen, written)
-                processed_at = time.time()
-                if ttl_ms is not None:
-                    _await_cleanup_batch(q, processed_at + ttl_ms / 1000 + 0.3)
-                else:
-                    time.sleep(1.5)
-            time.sleep(0.5)
-            return {
-                (r.doc_a, r.doc_b)
-                for r in spark.sql(f"select * from {name}").collect()
-            }
-        finally:
-            q.stop()
+        return set(_ttl_scenario(
+            spark, tmp_path,
+            lambda st, ttl: sd.streaming_minhash_lsh_pairs(
+                st, threshold=0.5, ttl_ms=ttl
+            ),
+            name, [b1, b2], ttl_ms, schema="doc_id long, text string",
+            project=lambda r: (r.doc_a, r.doc_b),
+        ))
 
-    control = run("mhkeep", ttl_ms=None)
-    expired = run("mhttl", ttl_ms=400)
+    control = run("mhkeep", None)
+    expired = run("mhttl", _TTL_MS)
     assert (1, 2) in control, control     # cross-batch pair found
     assert (1, 2) not in expired, expired  # bucket forgot doc 1
 
@@ -2176,44 +2151,20 @@ def test_ann_topk_state_ttl_expires(spark, tmp_path):
     # same direction as the query -> same LSH bucket, cosine 1.0
     b1 = [(1, base)]
     b2 = [(2, [x * 2 for x in base])]
-    schema = "vec_id long, embedding array<float>"
 
     def run(name, ttl_ms):
-        src = f"{tmp_path}/src_{name}"
-        os.makedirs(src, exist_ok=True)
-        stream = read_stream(
-            spark, "parquet", src,
-            schema=spark.createDataFrame([], schema).schema,
+        return _ttl_scenario(
+            spark, tmp_path,
+            lambda st, ttl: streaming_lsh_topk(
+                st, queries, planes, k=10, probe_hamming=0, ttl_ms=ttl
+            ),
+            name, [b1, b2], ttl_ms, schema="vec_id long, embedding array<float>",
+            output_mode="update", project=lambda r: r,
         )
-        topk = streaming_lsh_topk(
-            stream, queries, planes, k=10, probe_hamming=0, ttl_ms=ttl_ms
-        )
-        q = write_stream(
-            topk, "memory", query_name=name, output_mode="update",
-            checkpoint=f"{tmp_path}/cp_{name}",
-        )
-        seen: dict = {}
-        written = 0
-        try:
-            for batch in (b1, b2):
-                spark.createDataFrame(batch, schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(src)
-                written += len(batch)
-                _await_input_rows(q, seen, written)
-                processed_at = time.time()
-                if ttl_ms is not None:
-                    _await_cleanup_batch(q, processed_at + ttl_ms / 1000 + 0.3)
-                else:
-                    time.sleep(1.5)
-            time.sleep(0.5)
-            return spark.sql(f"select * from {name}").collect()
-        finally:
-            q.stop()
 
-    control = run("annkeep", ttl_ms=None)
+    control = run("annkeep", None)
     assert any(r.n_seen == 2 for r in control), control  # both folded
-    expired = run("annttl", ttl_ms=400)
+    expired = run("annttl", _TTL_MS)
     assert all(r.n_seen == 1 for r in expired), expired  # never merged
     assert any(r.vec_id == 2 for r in expired), expired  # rebuilt cold
 
@@ -2266,67 +2217,3 @@ def test_streaming_multimodal_ingest_resizes_binary_files(spark, tmp_path):
     assert (w, h, sr, sg, sb) == (1, 1, 9, 9, 9)
     w, h, sr, sg, sb = decode_ppm(by_dims[(2, 1)])
     assert (w, h) == (2, 1) and (sr, sg, sb) == (0 + 6, 1 + 7, 2 + 8)
-
-
-# ---------------------------------------------------------------------------
-# latency mode: the r11 STREAM_BENCH finding (stateful micro-batch p50
-# scales with the shuffle-partition count — 2.42 s @ 8 vs 11.4 s @ 32 on
-# identical batches) as an API on the stateful constructors
-# ---------------------------------------------------------------------------
-
-
-def test_latency_mode_pins_state_partitions(spark, tmp_path):
-    """shuffle_partitions=4 on car_move_detection must reach the state
-    store (the progress event's stateOperators reports the pinned
-    partition count) and leave the operator's emissions unchanged."""
-    tmp = str(tmp_path)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.createDataFrame(CAR_ROWS, CAR_SCHEMA).coalesce(1).write.parquet(
-            f"{tmp}/cars"
-        )
-        cars_stream = read_stream(
-            spark, "parquet", f"{tmp}/cars",
-            schema=spark.createDataFrame([], CAR_SCHEMA).schema,
-        )
-        moves = car_move_detection(cars_stream, shuffle_partitions=4)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-        q = write_stream(
-            moves, "memory", query_name="lat_moves", checkpoint=f"{tmp}/cp"
-        )
-        q.processAllAvailable()
-        prog = q.lastProgress
-        q.stop()
-        assert prog["stateOperators"], prog
-        assert int(prog["stateOperators"][0]["numShufflePartitions"]) == 4, prog
-        rows = {
-            (r.seq, r.car_id, r.zone_id, r.is_arriving)
-            for r in spark.sql("select * from lat_moves").collect()
-        }
-        # same emissions as the default-partition runs elsewhere in this
-        # file: arrive per event + leave for the two zone changes (incl.
-        # the same-zone quirk's leave)
-        assert (0, 1, 100, True) in rows
-        assert (4, 1, 100, False) in rows and (4, 1, 101, True) in rows
-        assert (6, 2, 100, False) in rows and (6, 2, 100, True) in rows
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def test_latency_mode_validates_and_restores(spark):
-    """latency_mode rejects nonsense values; apply_shuffle_partitions is
-    a no-op on None (the session conf must not move)."""
-    import pytest as _pytest
-
-    from kafka_streams_one_to_many_join_spark.streaming.latency import (
-        apply_shuffle_partitions,
-        latency_mode,
-    )
-
-    df = spark.range(1)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    assert apply_shuffle_partitions(df, None) is df
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    with _pytest.raises(ValueError):
-        latency_mode(df, 0)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
