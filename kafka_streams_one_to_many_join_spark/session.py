@@ -9,6 +9,25 @@ reference's persistent RocksDB stores, DemoApp.scala:182-185,251-254).
 Shuffle partitions default to the local core count; on a real cluster this
 is overridden via ``spark.sql.shuffle.partitions`` / AQE advisory sizes —
 the operators themselves never hardcode a partition count.
+
+Checkpoint files (offset and commit logs, RocksDB changelogs) are written
+through Spark's ``FileSystemBasedCheckpointFileManager`` instead of the
+default FileContext-based one.  Both write a temp file and rename it into
+place.  The FileContext rename checks the destination with
+``getFileLinkStatus``, and Hadoop's local filesystem answers that, when the
+native Hadoop library is absent, by forking a ``readlink`` process
+(``FileUtil.readLink``): at least one fork per checkpoint file, dozens
+per micro-batch.  The FileSystem rename does not look at links.
+(Creating a file or directory still forks a ``chmod`` under either
+manager: without the native library Hadoop sets permissions through a
+shell.)  Neither manager syncs: both close the temp file and rename it,
+with no ``hsync``/``hflush`` and no fsync on the local filesystem, so the
+switch drops the ``readlink`` forks, not a flush.  The checkpoint layout
+is the same file for file (``.crc`` sidecars included), so either manager
+restarts from the other's checkpoint.  What it gives up: its refusal to
+overwrite an existing log entry is an exists-check before the rename, not
+an atomic rename, which matters only if two query instances write one
+checkpoint at once.
 """
 
 from __future__ import annotations
@@ -21,6 +40,11 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 _REPO_ROOT = str(Path(__file__).resolve().parent.parent)
+
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def _ensure_workers_can_import() -> None:
@@ -97,6 +121,11 @@ def get_session(
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
         .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+        # no readlink fork per checkpoint-file rename (module docstring)
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
+        )
         # the generated-class cache defaults to 100 entries; a 100-query
         # suite compiles far more codegen stages than that, so later
         # queries recompile classes their predecessors evicted.  Sizing

@@ -46,16 +46,28 @@ iterate events row-by-row in Python.  That is the faithful-semantics
 cost — the operator is an arrival-order state machine
 (each event's emission depends on state mutated by the previous event of
 the same key), so it cannot be vectorized without changing the emission
-contract.  Per-event cost is constant and small; aggregate throughput
-scales with ``spark.sql.shuffle.partitions`` × number of executors, exactly
-like the reference scales with Kafka partitions × stream threads.  At
-100 TB the knob is partition count, not per-row cost.
+contract.  The steps read each key's chunk as plain column lists and sort
+tuples, with no per-key pandas work, and the join sees only the five
+columns it reads (``symmetric_one_to_many_join``).  Measured split of a
+``stream_cars`` benchmark step (600 car events + 32 zone events, 4 vCPU,
+traced, ~4 s): the step functions cost 12 µs (move) and 17 µs (join) per
+key in a micro-benchmark, ~25 ms for the ~1,500 keys of a step — under 1%
+of the step's ~7 CPU-s of Python.  That Python time is pyspark's per-key
+machinery (Arrow→pandas conversion of each key's rows and state, the
+output frame) and per-task worker setup; the JVM side spends ~8 CPU-s, of
+which checkpoint commits are now ~0.1 s.  Aggregate throughput scales with
+``spark.sql.shuffle.partitions`` × number of executors, exactly like the
+reference scales with Kafka partitions × stream threads.  At 100 TB the
+knob is partition count, not per-row cost.
 
 Checkpoint compatibility: the switch from CSV-string state columns to
 array-typed state columns (round 3) is a state-schema BREAK.  A streaming
 query restarted from a checkpoint written by the string-state version fails
 Spark's state schema compatibility check — discard old checkpoints (or run
-with a fresh checkpointLocation) when upgrading across that change.
+with a fresh checkpointLocation) when upgrading across that change.  The
+later narrowing of the join's input to five columns is not a break: the
+key and state schemas are unchanged, and a query restarted on a checkpoint
+written before it continues the emission trace exactly.
 """
 
 from __future__ import annotations
@@ -116,6 +128,11 @@ _JOIN_STATE = StructType(
     ]
 )
 
+# emit_rank of each join input row: a car's arrive and leave rows share the
+# source event's seq, and the rank orders them (arrive first, the same-zone
+# quirk needs that); zone events carry their own seq.
+_ARRIVE, _LEAVE, _ZONE = 0, 1, 2
+
 
 def _move_step(car_id: int, state: tuple | None, pdfs: Iterator[pd.DataFrame]):
     """Per-car move detection: each event emits an arrive row and, if the
@@ -125,14 +142,14 @@ def _move_step(car_id: int, state: tuple | None, pdfs: Iterator[pd.DataFrame]):
     last_zone, last_fuel = state if state is not None else (None, None)
     out: list[tuple] = []
     for pdf in pdfs:
-        for row in pdf.sort_values("seq").itertuples(index=False):
-            zone, fuel, seq = int(row.to_zone_id), float(row.fuel_level), int(row.seq)
+        chunk = zip(pdf["seq"].tolist(), pdf["to_zone_id"].tolist(), pdf["fuel_level"].tolist())
+        for seq, zone, fuel in sorted(chunk):
             # arrive at the new zone (DemoApp.scala:127)
-            out.append((car_id, zone, True, 0, fuel, seq))
+            out.append((car_id, zone, True, _ARRIVE, fuel, seq))
             # leave the previous zone if any — even if unchanged (quirk,
             # DemoApp.scala:116-119,129)
             if last_zone is not None:
-                out.append((car_id, int(last_zone), False, 1, fuel, seq))
+                out.append((car_id, int(last_zone), False, _LEAVE, fuel, seq))
             last_zone, last_fuel = zone, fuel
     return (last_zone, last_fuel), out
 
@@ -170,7 +187,7 @@ def tag_zone_events(zone_events: DataFrame) -> DataFrame:
         F.col("zone_id"),
         F.lit("zone").alias("kind"),
         F.col("seq"),
-        F.lit(2).alias("emit_rank"),
+        F.lit(_ZONE).alias("emit_rank"),
         F.lit(None).cast("int").alias("car_id"),
         F.lit(None).cast("boolean").alias("is_arriving"),
         F.lit(None).cast("double").alias("fuel_level"),
@@ -197,22 +214,27 @@ def _join_step(zone_id: int, state: tuple | None, pdfs: Iterator[pd.DataFrame]):
     )
     out: list[tuple] = []
     for pdf in pdfs:
-        for row in pdf.sort_values(["seq", "emit_rank"]).itertuples(index=False):
-            if row.kind == "car":
-                car_id = int(row.car_id)
-                if bool(row.is_arriving):
-                    # upsert + probe (DemoApp.scala:210-222)
-                    cars[car_id] = float(row.fuel_level)
-                    if pollution is not None:
-                        out.append((car_id, zone_id, float(row.fuel_level), float(pollution)))
-                else:
-                    # delete, no retraction (DemoApp.scala:224-230)
-                    cars.pop(car_id, None)
+        chunk = zip(
+            pdf["seq"].tolist(), pdf["emit_rank"].tolist(),
+            pdf["car_id"].tolist(), pdf["value"].tolist(),
+        )
+        # (seq, emit_rank) is unique per zone, so the tuple order is the
+        # event order; car_id arrives as float when the chunk holds zone rows
+        for _seq, rank, car_id, value in sorted(chunk):
+            if rank == _ARRIVE:
+                # upsert + probe (DemoApp.scala:210-222)
+                car_id = int(car_id)
+                cars[car_id] = value
+                if pollution is not None:
+                    out.append((car_id, zone_id, value, pollution))
+            elif rank == _LEAVE:
+                # delete, no retraction (DemoApp.scala:224-230)
+                cars.pop(int(car_id), None)
             else:
                 # zone upsert + fan-out (DemoApp.scala:279-290)
-                pollution = float(row.pollution_level)
-                for car_id, fuel in sorted(cars.items()):
-                    out.append((car_id, zone_id, fuel, pollution))
+                pollution = value
+                for cid, fuel in sorted(cars.items()):
+                    out.append((cid, zone_id, fuel, pollution))
     return (pollution, list(cars.keys()), list(cars.values())), out
 
 
@@ -223,6 +245,12 @@ def symmetric_one_to_many_join(tagged: DataFrame, ttl_ms: int | None = None) -> 
     ``ttl_ms``: opt-in processing-time state TTL (see ``_join_step``);
     default None keeps the reference's keep-forever semantics.
     """
+    # only what _join_step reads crosses into Python: value is a car row's
+    # fuel_level or a zone row's pollution_level, emit_rank tells them apart
+    narrow = tagged.select(
+        "zone_id", "seq", "emit_rank", "car_id",
+        F.coalesce("fuel_level", "pollution_level").alias("value"),
+    )
     return keyed_state(
-        tagged, "zone_id", _join_step, JOINED_STREAM, _JOIN_STATE, ttl_ms=ttl_ms
+        narrow, "zone_id", _join_step, JOINED_STREAM, _JOIN_STATE, ttl_ms=ttl_ms
     )

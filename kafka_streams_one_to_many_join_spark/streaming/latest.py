@@ -18,6 +18,8 @@ Scale: state is one row per key, hash-partitioned across executors
 
 from __future__ import annotations
 
+from operator import itemgetter
+
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
@@ -43,8 +45,9 @@ def streaming_latest_by_key(
     def step(k, cur, pdfs):
         out: list[tuple] = []
         for pdf in pdfs:
-            for row in pdf.sort_values(ord_col).itertuples(index=False):
-                vals = tuple(getattr(row, c) for c in cols)
+            chunk = zip(*(pdf[c].tolist() for c in cols))
+            # stable: rows tied on ord_col keep their arrival order
+            for vals in sorted(chunk, key=itemgetter(0)):
                 if cur is None or vals[0] >= cur[0]:
                     cur = vals
                     out.append((k, *cur))

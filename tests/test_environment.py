@@ -1,7 +1,7 @@
 """What importing the package and building a session do to the process:
-the streaming package import must leave the environment alone, and the
-driver-memory default must fit the host it runs on.  No SparkSession
-needed.
+the streaming package import must leave the environment alone, the
+driver-memory default must fit the host it runs on, and checkpoint files
+go through the checkpoint manager the session names.
 """
 
 from __future__ import annotations
@@ -66,3 +66,14 @@ def test_driver_memory_default_fits_the_host(monkeypatch):
 
     monkeypatch.setattr(session.os, "sysconf", _no_sysconf)
     assert session._default_driver_memory() == "16g"
+
+
+def test_checkpoint_manager_reaches_the_streaming_hadoop_conf(spark):
+    """Checkpoint logs and state changelogs are written through the
+    FileSystem-based manager (no ``readlink`` fork per rename; see the
+    ``session`` docstring).  Spark's checkpoint-manager factory reads the
+    class from the session's Hadoop conf, so that is where it is pinned."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    assert hadoop_conf.get(key) == session.CHECKPOINT_FILE_MANAGER
+    assert spark._jvm.java.lang.Class.forName(session.CHECKPOINT_FILE_MANAGER)

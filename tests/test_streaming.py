@@ -387,6 +387,25 @@ def test_stream_static_join(spark, tmp_path):
     assert got == [(100, 1, 50.0)]
 
 
+def test_join_state_input_is_five_columns(spark, tmp_path):
+    """Only the columns ``_join_step`` reads cross into Python: the
+    keyed-state node's child is the 5-column projection, without the
+    tagged union's ``kind`` and ``is_arriving``."""
+    from kafka_streams_one_to_many_join_spark.streaming.join import CAR_MOVE_EVENT_STREAM
+
+    for d in ("moves", "zones"):
+        os.makedirs(f"{tmp_path}/{d}")
+    moves = read_stream(spark, "parquet", f"{tmp_path}/moves", schema=CAR_MOVE_EVENT_STREAM)
+    zones = read_stream(spark, "parquet", f"{tmp_path}/zones", schema=ZONE_SCHEMA)
+    joined = symmetric_one_to_many_join(tag_car_moves(moves).unionByName(tag_zone_events(zones)))
+    node = joined._jdf.queryExecution().analyzed()
+    while node.nodeName() != "FlatMapGroupsInPandasWithState":
+        node = node.children().apply(0)
+    child = node.children().apply(0).output()
+    names = [child.apply(i).name() for i in range(child.size())]
+    assert names == ["zone_id", "seq", "emit_rank", "car_id", "value"]
+
+
 def test_streaming_join_multi_zone_isolation(spark, tmp_path):
     """Keys are isolated: state/fan-out for one zone never leaks into
     another (hash-partitioned keyed state, the Spark analog of the
