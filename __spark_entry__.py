@@ -890,16 +890,6 @@ def q_simhash_clusters(spark: SparkSession, sf: str) -> DataFrame:
     return simhash_near_dup_clusters(load_table(spark, sf, "documents"))
 
 
-def _ann_exact_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact brute-force cosine top-k via Catalyst higher-order exprs —
-    the former standalone ann_topk body; also ann_recall's baseline."""
-    emb = _emb_full_width(load_table(spark, sf, "embeddings"))
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return brute_force_topk(emb, queries, k=10)
-
-
 def q_ann_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Exact brute-force top-k, BOTH execution faces as a method-tagged
     bag union (r16 consolidation funding the ``ann_topk_maintained``
@@ -909,22 +899,20 @@ def q_ann_topk(spark: SparkSession, sf: str) -> DataFrame:
     - ``method='expr'`` — Catalyst zip_with/aggregate cosine, the
       JVM-side path — every column of the former ann_topk rows;
     - ``method='pandas'`` — the vectorized Arrow/numpy matmul path
-      (driver-collected query set capped at ``_ANN_QUERY_CAP``) — every
+      (driver-collected query set capped at ``_ANN_QUERY_CAP``, the
+      lowest query ids first; the oracle applies the same cap) — every
       column of the former ann_topk_pandas rows.
 
     Both faces compute the SAME exact semantics, so the union doubles
     each row with distinct tags and every original value stays
     hash-pinned; it also keeps the expr-vs-pandas agreement itself
     under the driver's hash check every round."""
-    expr_face = _ann_exact_topk(spark, sf).withColumn("method", F.lit("expr"))
     emb = _emb_full_width(load_table(spark, sf, "embeddings"))
-    qpdf = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-        .orderBy("query_id")
-        .limit(_ANN_QUERY_CAP)
-        .toPandas()
+    queries = _ann_queries(emb)
+    expr_face = brute_force_topk(emb, queries, k=10).withColumn(
+        "method", F.lit("expr")
     )
+    qpdf = queries.orderBy("query_id").limit(_ANN_QUERY_CAP).toPandas()
     pandas_face = brute_force_topk_pandas(emb, qpdf, k=10).withColumn(
         "method", F.lit("pandas")
     )
@@ -960,6 +948,16 @@ def _emb_full_width(emb: DataFrame) -> DataFrame:
     )
 
 
+def _ann_queries(emb: DataFrame) -> DataFrame:
+    """The ANN family's query set — the oracles' ``WHERE vec_id % 100 =
+    0`` — with ``vec_id`` renamed ``query_id``.  Every other column rides
+    along, so queries cut from an index keep its stamped norm and bucket
+    for ``ann_scored_indexed`` to read."""
+    return emb.filter(F.col("vec_id") % 100 == 0).withColumnRenamed(
+        "vec_id", "query_id"
+    )
+
+
 def q_ann_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """Approximate top-k: hyperplane-LSH bucket join + exact re-rank,
     multi-probe at Hamming <= 2 (37 of 256 buckets per query ≈ 15% of
@@ -974,9 +972,7 @@ def q_ann_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
     policy, shared bit-for-bit); non-full-width vectors drop via the
     family-wide _emb_full_width guard, mirrored in the oracle."""
     emb = _emb_full_width(load_table(spark, sf, "embeddings"))
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _ann_queries(emb)
     planes = seeded_planes(_N_PLANES, _EMB_DIM, _PLANES_SEED)
     return lsh_topk(emb, queries, planes, k=10, probe_hamming=2)
 
@@ -994,9 +990,7 @@ def q_ann_topk_ivf(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _ann_queries(emb)
     cents = seeded_centroids(_IVF_NLIST, _EMB_DIM, _IVF_SEED)
     return ivf_topk(emb, queries, cents, nprobe=_IVF_NPROBE, k=10)
 
@@ -1004,8 +998,8 @@ def q_ann_topk_ivf(spark: SparkSession, sf: str) -> DataFrame:
 def q_ann_topk_maintained(spark: SparkSession, sf: str) -> DataFrame:
     """ANN top-k over a PERSISTED index under a MUTABLE corpus (r16,
     VERDICT r15 item 1 — completing the maintenance trilogy): build
-    "yesterday's" hyperplane-LSH index over the full corpus
-    (``ann_lsh_index`` — geometry stamped in column metadata), apply
+    "yesterday's" LSH and IVF indexes over the full corpus in one pinned
+    pass (``ann_indexes`` — geometry stamped in column metadata), apply
     tonight's change feed (``ann_index_apply``: vec_id % 7 == 3
     re-ingested with a REVERSED embedding — moves their buckets;
     vec_id % 11 == 5 deleted; the %77 overlap ends DELETED per the
@@ -1029,20 +1023,13 @@ def q_ann_topk_maintained(spark: SparkSession, sf: str) -> DataFrame:
     query side broadcast.  Maintain-vs-rebuild and probe-vs-full
     measured at sf1/sf10 in SCALE.md r16 (IVF-256: maintain 0.338x,
     probe 0.106x)."""
-    from pyspark.sql import Window
-
     from kafka_streams_one_to_many_join_spark.functions.similarity import (
-        _cell_dots_expr,
-        _ivf_stamp,
-        _lsh_eligible,
-        _lsh_stamp,
+        _rank_topk,
         ann_index_apply,
+        ann_indexes,
         ann_scored_indexed,
-        hyperplane_lsh_bucket,
-        norm_expr,
         seeded_centroids,
     )
-    from kafka_streams_one_to_many_join_spark.model import ensure_parallelism
 
     emb = load_table(spark, sf, "embeddings")
     planes = seeded_planes(_N_PLANES, _EMB_DIM, _PLANES_SEED)
@@ -1051,58 +1038,7 @@ def q_ann_topk_maintained(spark: SparkSession, sf: str) -> DataFrame:
         "embedding", F.reverse("embedding")
     )
     deletes = emb.filter(F.col("vec_id") % 11 == 5).select("vec_id")
-
-    # ONE pinned corpus pass builds BOTH frozen indexes (r18 — the
-    # ann_recall base pattern, guide §5/§8): ann_lsh_index and
-    # ann_ivf_index each scanned the corpus and computed its norms
-    # separately, so the corpus was read and normed twice per
-    # construction.  The combined pass computes norm + hyperplane bucket
-    # + IVF cell + the LSH family's eligibility flag per full-width
-    # vector once; each frozen index is then a NARROW projection of the
-    # pinned blocks carrying its own geometry stamp (LSH additionally
-    # filters to its baked-in eligibility — a subset of full-width, so
-    # the projections reproduce ann_lsh_index/ann_ivf_index
-    # row-for-row; differentially covered by the maintained-vs-rebuilt
-    # oracle hash).  The LSH flag is the index builder's own
-    # ``_lsh_eligible`` rule; its null/width half is already true of
-    # every ``base`` row.
-    base = materialize(
-        ensure_parallelism(
-            emb.filter(
-                F.col("embedding").isNotNull()
-                & (F.size("embedding") == _EMB_DIM)
-            )
-        ).select(
-            "vec_id",
-            "embedding",
-            F.expr(norm_expr("embedding")).alias("norm"),
-            _lsh_eligible("embedding", _EMB_DIM).alias("_lsh_ok"),
-            hyperplane_lsh_bucket("embedding", planes).alias("_bucket"),
-            F.expr(_cell_dots_expr("embedding", cents)).alias("_dots"),
-        )
-        .select(
-            "vec_id",
-            "embedding",
-            "norm",
-            "_lsh_ok",
-            "_bucket",
-            F.expr("array_position(_dots, array_max(_dots))")
-            .cast("int")
-            .alias("_cell"),
-        )
-    )
-    lsh_index = base.filter("_lsh_ok").select(
-        "vec_id",
-        "embedding",
-        "norm",
-        F.col("_bucket").alias("bucket", metadata=_lsh_stamp(planes)),
-    )
-    ivf_index = base.select(
-        "vec_id",
-        "embedding",
-        "norm",
-        F.col("_cell").alias("cell", metadata=_ivf_stamp(cents)),
-    )
+    lsh_index, ivf_index = ann_indexes(emb, planes, cents)
 
     # Pin each maintained index once (r17): it feeds BOTH the query-set
     # derivation and the probe, and an unpinned diamond plants the whole
@@ -1112,37 +1048,22 @@ def q_ann_topk_maintained(spark: SparkSession, sf: str) -> DataFrame:
     # stored rows (SCALE.md r16's 0.106× probe measurement is exactly
     # that).  Geometry stamps survive the checkpoint (column metadata
     # rides the schema), so the probe still resolves planes/centroids
-    # from the pinned frame.  Plan evidence: plans/r17 (the r17 pinning)
-    # and plans/r18 (this round's single-pass base).
+    # from the pinned frame.
     m_lsh = materialize(
         ann_index_apply(lsh_index, upserts=upserts, delete_ids=deletes)
-    )
-    q_lsh = m_lsh.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
     )
     m_ivf = materialize(
         ann_index_apply(ivf_index, upserts=upserts, delete_ids=deletes)
     )
-    q_ivf = m_ivf.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+    scored = ann_scored_indexed(
+        m_lsh, _ann_queries(m_lsh), probe_hamming=2
+    ).withColumn("method", F.lit("lsh")).unionByName(
+        ann_scored_indexed(
+            m_ivf, _ann_queries(m_ivf), nprobe=_IVF_NPROBE
+        ).withColumn("method", F.lit("ivf"))
     )
-    # Both probe faces ranked by ONE window keyed (method, query_id)
-    # (r18, the ann_recall shared-window pattern) — per-face ranking is
-    # unchanged because the window keys nest.
-    scored = ann_scored_indexed(m_lsh, q_lsh, probe_hamming=2).withColumn(
-        "method", F.lit("lsh")
-    ).unionByName(
-        ann_scored_indexed(m_ivf, q_ivf, nprobe=_IVF_NPROBE).withColumn(
-            "method", F.lit("ivf")
-        )
-    )
-    w = Window.partitionBy("method", "query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "vec_id", "sim", "rank", "method")
+    return _rank_topk(scored, 10, ["method", "query_id"]).select(
+        "query_id", "vec_id", "sim", "rank", "method"
     )
 
 
@@ -3916,235 +3837,75 @@ def q_split_leakage(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
-    """Recall@10 of the two approximate ANN paths against the exact
-    brute-force baseline — the eval that turns "LSH/IVF are the scale
-    path" from a design claim into a measured number, per query and per
-    method, entirely inside the engine.
+    """Recall@10 of the approximate ANN faces against the exact
+    brute-force top-10, per (method, query_id): ``n_hit`` of a face's
+    top-10 are in the exact top-10, ``recall = n_hit / n_exact``.  Same
+    query set and seeds as the standalone queries:
 
-    Reuses the three existing recipes verbatim (same query set, same
-    seeds): per (method, query_id), recall = |approx top-10 ∩ exact
-    top-10| / 10 via a left-semi join on (query_id, vec_id).  The joins
-    are between k·|queries|-row frames — broadcast, nothing corpus-sized
-    shuffles beyond what the three parent pipelines already do.  The
-    exact frame (k rows per query) is checkpointed: it feeds both
-    the semi-join and the n_exact denominator, and without the
-    checkpoint the diamond re-executes the full brute-force scan — the
-    most expensive branch — once per consumer; at cluster scale the
-    re-executed Q·N cosine pass is real cost.  The checkpoint is EAGER:
-    lazy materialization races the two consumers' first actions, so
-    whichever action plans first may still pay the double brute-force
-    scan — exactly the 5.05× sample spread BENCH_r07 recorded for this
-    query.  Eager pins one brute-force pass per execution (r08 bench:
-    3.89 s → 2.50 s median at sf0.1, spread gone; the IVF branch's plan
-    fix contributes too).
+    - ``lsh`` — multi-probe Hamming 2 over the hyperplane-LSH index;
+    - ``ivf`` — nprobe 3 over the seeded-centroid IVF index;
+    - ``ivf_trained`` — the same probe over an IVF index on centroids
+      moved by ONE spherical-kmeans Lloyd step (``train_centroids``,
+      ``iters=1``: one step, so the oracle can mirror the training in
+      SQL instead of needing data-dependent literals).
 
-    r18 (VERDICT r17 item 3 — this query's plan showed the repeated-
-    subtree disease the r17 checkpoint trilogy cured elsewhere: 6
-    parquet scans of the same corpus, each face re-signing/re-assigning
-    every vector): ONE corpus pass now computes everything every
-    consumer needs per vector — norm, the LSH nonzero-eligibility flag,
-    the hyperplane bucket, the seeded-IVF cell — into a pinned base
-    frame (guide §5 caching rule / §8 "decide with small rows, move
-    heavy bytes once").  The three approximate faces, the exact
-    brute-force baseline, AND the one-step k-means training all read
-    the pinned base; no parquet scan remains in the final plan and the
-    plane/centroid dot trees are evaluated corpus-wide exactly once
-    (the trained face's assignment, knowable only after training, runs
-    over pinned blocks).  Every face reproduces its parent recipe
-    expression-for-expression (same filters, same cosine/rounding/rank
-    formulation), so the output is byte-identical — oracle-verified.
+    Every face reads the one pinned corpus pass of ``ann_indexes``, and
+    the three faces' candidates share one ranking window.  Every
+    (method, query) pair is a row, so a face that finds nothing for a
+    query reports recall 0 instead of vanishing.
 
-    Measured at sf0.01 (random-gaussian fixture — the worst case for
-    sublinear ANN, see similarity.lsh_topk): lsh (multi-probe Hamming 2,
-    ~14% of corpus scanned) 0.26, ivf (nprobe 3/16, ~19% scanned) 0.44 —
-    recall tracks scanned fraction on unstructured data, which is
-    exactly what this eval exists to expose.  Round 9 extends these two
-    points into the full dial: scripts/ann_tradeoff.py sweeps LSH
-    Hamming 0-3 and IVF nprobe 1-8 with per-setting scanned fractions;
-    the monotone, scale-stable curves live in SCALE.md."""
-    from pyspark.sql import Window
+    ``exact`` is pinned by an EAGER checkpoint: it feeds both the
+    semi-join and the ``n_exact`` denominator, and unpinned, that
+    diamond re-runs the Q·N brute-force scan — the most expensive
+    branch — once per consumer.  A lazy pin races the two consumers'
+    first actions, so either may still pay the scan twice.
+
+    On the random-gaussian fixture recall tracks the scanned fraction;
+    the full recall/scan dial is in SCALE.md (scripts/ann_tradeoff.py)."""
+    from functools import reduce
 
     from kafka_streams_one_to_many_join_spark.functions.similarity import (
-        _cell_dots_expr,
-        brute_force_topk,
-        cosine_from_norms,
-        hyperplane_lsh_bucket,
-        ivf_probe_cells,
-        norm_expr,
-        probe_masks,
+        _rank_topk,
+        ann_indexes,
+        ann_ivf_index,
+        ann_scored_indexed,
         seeded_centroids,
         train_centroids,
     )
-    from kafka_streams_one_to_many_join_spark.model import ensure_parallelism
 
-    planes = seeded_planes(_N_PLANES, _EMB_DIM, _PLANES_SEED)
     cents = seeded_centroids(_IVF_NLIST, _EMB_DIM, _IVF_SEED)
-    # lsh_topk's scan-level degenerate-vector predicate, verbatim (the
-    # LSH family's eligibility policy; IVF keeps full-width-only)
-    nonzero = (
-        "forall(embedding, v -> v is not null and not isnan(v))"
-        " and exists(embedding, v -> v != cast(0.0 as double))"
-    )
-    emb = load_table(spark, sf, "embeddings")
-    # ONE corpus pass: norm + LSH eligibility + hyperplane bucket +
-    # seeded-IVF cell per full-width vector, pinned.  The cell uses
-    # ivf_topk's exact two-step formulation (materialized _dots →
-    # array_position argmax) so face outputs stay byte-identical.
-    base = materialize(
-        ensure_parallelism(_emb_full_width(emb))
-        .select(
-            "vec_id",
-            "embedding",
-            F.expr(norm_expr("embedding")).alias("_n"),
-            F.expr(nonzero).alias("_nz"),
-            hyperplane_lsh_bucket("embedding", planes).alias("_bucket"),
-            F.expr(_cell_dots_expr("embedding", cents)).alias("_dots"),
-        )
-        .select(
-            "vec_id",
-            "embedding",
-            "_n",
-            "_nz",
-            "_bucket",
-            F.expr("array_position(_dots, array_max(_dots))")
-            .cast("int")
-            .alias("_cell"),
-        )
-    )
-    base_queries = base.filter(F.col("vec_id") % 100 == 0)
-
-    # exact brute-force baseline over the pinned base (same rows as
-    # _ann_exact_topk's _emb_full_width corpus, same recipe function)
-    exact = (
-        brute_force_topk(
-            base.select("vec_id", "embedding"),
-            base_queries.select(F.col("vec_id").alias("query_id"), "embedding"),
-            k=10,
-        )
-        .select("query_id", "vec_id")
-        .transform(materialize)
-    )
-
-    # Per-face ranking is a row_number window partitioned by query_id —
-    # one window per face used to mean one sort EXCHANGE per face (3
-    # total).  The three faces' scored candidates are instead UNIONED
-    # with their method tag and ranked by ONE window partitioned by
-    # (method, query_id) (r18, guide §2.4: operations keyed the same way
-    # share one exchange) — per-(face, query) ranking is unchanged
-    # expression-for-expression, so face outputs are byte-identical.
-
-    # LSH face — lsh_topk(emb_fw, queries, planes, k=10, probe_hamming=2)
-    # expression-for-expression, candidates from the pinned bucket column
-    masks = probe_masks(_N_PLANES, 2)
-    mask_list = ", ".join(str(m) for m in masks)
-    q_lsh = base_queries.filter("_nz").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("_qvec"),
-        F.col("_n").alias("_qn"),
-        F.explode(
-            F.expr(f"transform(array({mask_list}), m -> _bucket ^ m)")
-        ).alias("_bucket"),
-    )
-    lsh_scored = (
-        base.filter("_nz")
-        .select("vec_id", "embedding", "_n", "_bucket")
-        .join(F.broadcast(q_lsh), on="_bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                cosine_from_norms("_qvec", "embedding", "_qn", "_n"), 6
-            ).alias("sim"),
-        )
-    )
-
-    def _ivf_scored(corpus_cells: DataFrame, probe_cents: list) -> DataFrame:
-        # ivf_topk's probe join, verbatim: query side broadcast, <=> on
-        # the cell key (the documented isnotnull-inference fix);
-        # ``corpus_cells`` carries (vec_id, embedding, _n, _c)
-        q = base_queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("_qvec"),
-            F.col("_n").alias("_qn"),
-            F.explode(
-                ivf_probe_cells("embedding", probe_cents, _IVF_NPROBE)
-            ).alias("_qcell"),
-        )
-        return (
-            corpus_cells.join(
-                F.broadcast(q), on=F.col("_c").eqNullSafe(F.col("_qcell"))
-            )
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "vec_id",
-                F.round(
-                    cosine_from_norms("_qvec", "embedding", "_qn", "_n"), 6
-                ).alias("sim"),
-            )
-        )
-
-    ivf_scored = _ivf_scored(
-        base.select("vec_id", "embedding", "_n", F.col("_cell").alias("_c")),
+    lsh_index, ivf_index = ann_indexes(
+        load_table(spark, sf, "embeddings"),
+        seeded_planes(_N_PLANES, _EMB_DIM, _PLANES_SEED),
         cents,
     )
-
-    # ivf_trained (r11, VERDICT r10 item 6): the SAME IVF recipe with the
-    # coarse quantizer moved by ONE deterministic spherical-kmeans Lloyd
-    # step from the seeded init — the driver-checked face of
-    # train_centroids (script-measured in SCALE.md "clustered-corpus ANN":
-    # +0.15 absolute recall at equal scan on clustered corpora).  One
-    # step, not five, so the oracle can mirror the training exactly in
-    # SQL (the kmeans_step recipe as a CTE) instead of needing
-    # data-dependent literals the static oracle cannot know.  Training
-    # cost is one pass over the pinned base + one (cells × dim)-scalar
-    # collect (train_centroids re-applies its own full-width filter — a
-    # no-op on base — and its own ivf_cell assignment, unchanged).
-    # the pinned base already carries the seeded-centroid assignment, so
-    # training's one Lloyd step reads it (assign_col, r18) instead of
-    # re-evaluating the nlist × dim dot argmax over the corpus
-    trained = train_centroids(base, cents, iters=1, assign_col="_cell")
-    # the trained assignment (knowable only after training) runs over
-    # pinned blocks, in ivf_topk's two-step materialized-dots form (one
-    # evaluation of the centroid-dot array per row, not two)
-    trained_corpus = (
-        base.select(
-            "vec_id",
-            "embedding",
-            "_n",
-            F.expr(_cell_dots_expr("embedding", trained)).alias("_dots"),
-        )
-        .select(
-            "vec_id",
-            "embedding",
-            "_n",
-            F.expr("array_position(_dots, array_max(_dots))")
-            .cast("int")
-            .alias("_c"),
-        )
+    queries = _ann_queries(ivf_index)
+    exact = materialize(
+        brute_force_topk(ivf_index, queries, k=10).select("query_id", "vec_id")
     )
-    trained_scored = _ivf_scored(trained_corpus, trained)
-    scored_union = (
-        lsh_scored.withColumn("method", F.lit("lsh"))
-        .unionByName(ivf_scored.withColumn("method", F.lit("ivf")))
-        .unionByName(trained_scored.withColumn("method", F.lit("ivf_trained")))
+    trained_index = ann_ivf_index(
+        ivf_index, train_centroids(ivf_index, cents, iters=1)
     )
-    w = Window.partitionBy("method", "query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    approx = (
-        scored_union.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "vec_id", "method")
+    faces = {
+        "lsh": ann_scored_indexed(
+            lsh_index, _ann_queries(lsh_index), probe_hamming=2
+        ),
+        "ivf": ann_scored_indexed(ivf_index, queries, nprobe=_IVF_NPROBE),
+        "ivf_trained": ann_scored_indexed(
+            trained_index, queries, nprobe=_IVF_NPROBE
+        ),
+    }
+    approx = _rank_topk(
+        reduce(
+            DataFrame.unionByName,
+            (df.withColumn("method", F.lit(m)) for m, df in faces.items()),
+        ),
+        10,
+        ["method", "query_id"],
     )
     hits = approx.join(F.broadcast(exact), ["query_id", "vec_id"], "left_semi")
     n_exact = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    # base = every (method, query) pair, so a method that returns NOTHING
-    # for some query still reports recall 0 instead of silently vanishing
-    methods = spark.createDataFrame(
-        [("lsh",), ("ivf",), ("ivf_trained",)], "method string"
-    )
+    methods = spark.createDataFrame([(m,) for m in faces], "method string")
     base = n_exact.crossJoin(F.broadcast(methods))
     per_q = base.join(
         F.broadcast(
@@ -5005,12 +4766,18 @@ def oracle_sql() -> dict[str, str]:
         # r16 consolidation: both exact faces, method-tagged (funds the
         # ann_topk_maintained slot; the two faces compute identical
         # values, so the union doubles each row under distinct tags and
-        # every original value stays hash-pinned)
+        # every original value stays hash-pinned).  The 'pandas' face
+        # answers only the first _ANN_QUERY_CAP query ids, as in Spark.
         "ann_topk": f"""
             WITH one AS ({_ann_exact_sql()})
             SELECT query_id, vec_id, sim, rank, 'expr' AS method FROM one
             UNION ALL
             SELECT query_id, vec_id, sim, rank, 'pandas' AS method FROM one
+            WHERE query_id IN (
+                SELECT vec_id FROM embeddings
+                WHERE embedding IS NOT NULL AND len(embedding) = {_EMB_DIM}
+                  AND vec_id % 100 = 0
+                ORDER BY vec_id LIMIT {_ANN_QUERY_CAP})
         """,
         # the maintained-index probes == fresh LSH / IVF probes over the
         # CORRECTED corpus (upserts re-bucketed/re-celled, deletions

@@ -61,6 +61,22 @@ def cosine_from_norms(a: str, b: str, na: str, nb: str) -> Column:
     return F.expr(f"({dot_expr(a, b)}) / nullif({na} * {nb}, 0.0)")
 
 
+def _rank_topk(
+    scored: DataFrame, k: int, by: list[str], id_col: str = "vec_id"
+) -> DataFrame:
+    """The ANN family's one top-k rule: per ``by`` group, ``rank`` =
+    row_number over (sim DESC, id ASC), keep ``rank <= k``.  The sim is
+    already rounded to 6 decimals, which makes the boundary deterministic
+    across engines; the id makes ties stable.  A caller scoring several
+    faces unions them with a tag column and ranks once by
+    ``[tag, query_id]`` — one sort exchange instead of one per face, and
+    per-face ranking is unchanged because the window keys nest."""
+    w = Window.partitionBy(*by).orderBy(F.col("sim").desc(), F.col(id_col).asc())
+    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rank") <= k
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -73,10 +89,8 @@ def brute_force_topk(
 
     Queries are broadcast (the small side by definition); the corpus is
     scanned once — the join is a broadcast nested loop producing Q·N cosine
-    evaluations with no shuffle of the corpus.  Ranking: row_number over
-    (rounded sim DESC, vec_id ASC) per query — the rounding makes the
-    boundary deterministic across engines, the id makes ties stable.
-    Self-matches (same id) are excluded.
+    evaluations with no shuffle of the corpus.  Ranking: ``_rank_topk``
+    per query.  Self-matches (same id) are excluded.
     """
     from kafka_streams_one_to_many_join_spark.model import ensure_parallelism
 
@@ -97,12 +111,7 @@ def brute_force_topk(
             F.round(cosine_from_norms("_qvec", vec_col, "_qn", "_n"), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
+    return _rank_topk(scored, k, [query_id_col], id_col)
 
 
 def brute_force_topk_pandas(
@@ -122,12 +131,17 @@ def brute_force_topk_pandas(
     NULL embeddings are dropped up front on both sides: ``np.stack``
     cannot batch a missing vector, and a NULL row can never hold a
     top-k slot on any corpus with ≥ k real candidates (its cosine is
-    NULL, ranked after every real similarity in both engines).
+    NULL, ranked after every real similarity in both engines).  No
+    query left means no row, as in ``brute_force_topk``.
     """
     import numpy as np
     import pandas as pd
 
     queries_pdf = queries_pdf[queries_pdf["embedding"].notna()]
+    if queries_pdf.empty:
+        return corpus.sparkSession.createDataFrame(
+            [], f"query_id bigint, {id_col} bigint, sim double, rank bigint"
+        )
     qids = queries_pdf["query_id"].to_numpy()
     qmat = np.stack(queries_pdf["embedding"].to_numpy()).astype("float64")
     qnorm = np.linalg.norm(qmat, axis=1)
@@ -164,12 +178,8 @@ def brute_force_topk_pandas(
     ).mapInPandas(
         part, schema=f"query_id bigint, {id_col} bigint, sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        partials.filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "sim", "rank")
+    return _rank_topk(
+        partials.filter(F.col(id_col) != F.col("query_id")), k, ["query_id"], id_col
     )
 
 
@@ -288,12 +298,7 @@ def lsh_topk(
             F.round(cosine_from_norms("_qvec", vec_col, "_qn", "_n"), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
+    return _rank_topk(scored, k, [query_id_col], id_col)
 
 
 def seeded_planes(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
@@ -386,7 +391,6 @@ def train_centroids(
     init: list[list[float]],
     iters: int = 5,
     vec_col: str = "embedding",
-    assign_col: str | None = None,
 ) -> list[list[float]]:
     """Spherical k-means training for the IVF coarse quantizer: iterate
     the ``kmeans_step`` recipe (assign via ``ivf_cell`` argmax-dot,
@@ -404,6 +408,13 @@ def train_centroids(
     training only moves the literals, which the recall measurement in
     SCALE.md ("clustered-corpus ANN") shows is exactly what matters on
     clustered data.
+
+    An IVF index stamped with ``init`` (``ann_ivf_index`` /
+    ``ann_indexes``) already holds the first step's assignment in its
+    ``cell`` column, so the first step reads that column instead of
+    re-evaluating the nlist × dim dot argmax over the corpus.  The stamp
+    decides: a ``cell`` built on any other centroids is ignored and the
+    assignment recomputed, so a stale column cannot skew training.
 
     Degenerate-input contract (r11 ADVICE close): NULL and
     non-full-width vectors are excluded from training — an empty array
@@ -433,20 +444,12 @@ def train_centroids(
         F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
     )
     cents = [list(c) for c in init]
+    stamped = (
+        "cell" in corpus.columns
+        and corpus.schema["cell"].metadata == _ivf_stamp(cents)
+    )
     for it in range(iters):
-        # ``assign_col`` (r18): a caller that has ALREADY materialized
-        # the init-centroid assignment (e.g. ann_recall's pinned base
-        # carries ivf_cell(vec, init) per row) names that column and the
-        # first iteration reads it instead of re-evaluating the
-        # nlist × dim dot argmax over the whole corpus.  Caller
-        # contract: the column equals ``ivf_cell(vec_col, init)`` on
-        # this corpus — later iterations always recompute (their
-        # centroids moved).
-        assign = (
-            F.col(assign_col)
-            if (it == 0 and assign_col is not None)
-            else ivf_cell(vec_col, cents)
-        )
+        assign = F.col("cell") if (it == 0 and stamped) else ivf_cell(vec_col, cents)
         rows = (
             corpus.select(assign.alias("_cell"), vec_col)
             .select("_cell", F.posexplode(vec_col).alias("_dim", "_x"))
@@ -562,12 +565,7 @@ def ivf_topk(
             F.round(cosine_from_norms("_qvec", vec_col, "_qn", "_n"), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
+    return _rank_topk(scored, k, [query_id_col], id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -664,11 +662,23 @@ def ann_ivf_index(
     argmax — the one-evaluation plan, see ``ivf_topk``), full centroid
     table stamped into ``cell``'s metadata.  Eligibility is the IVF
     family's: full-width vectors only (``ivf_topk``'s r11 guard)."""
+    return _ivf_pass(corpus, centroids, id_col, vec_col)
+
+
+def _ivf_pass(
+    corpus: DataFrame,
+    centroids: list[list[float]],
+    id_col: str,
+    vec_col: str,
+    *extra: Column,
+) -> DataFrame:
+    """``ann_ivf_index``'s pass, plus ``extra`` (aliased) columns computed
+    in the same projection as the norm and the centroid dots:
+    ``(id, vec, norm, *extra, cell)``."""
     from kafka_streams_one_to_many_join_spark.model import ensure_parallelism
 
     dim = len(centroids[0])
-    ds = _cell_dots_expr(vec_col, centroids)
-    return (
+    dots = (
         ensure_parallelism(
             corpus.filter(
                 F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
@@ -678,16 +688,61 @@ def ann_ivf_index(
             F.col(id_col),
             F.col(vec_col),
             F.expr(norm_expr(vec_col)).alias("norm"),
-            F.expr(ds).alias("_dots"),
+            *extra,
+            F.expr(_cell_dots_expr(vec_col, centroids)).alias("_dots"),
         )
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            "norm",
-            F.expr("array_position(_dots, array_max(_dots))")
-            .cast("int")
-            .alias("cell", metadata=_ivf_stamp(centroids)),
+    )
+    return dots.select(
+        *[c for c in dots.columns if c != "_dots"],
+        F.expr("array_position(_dots, array_max(_dots))")
+        .cast("int")
+        .alias("cell", metadata=_ivf_stamp(centroids)),
+    )
+
+
+def ann_indexes(
+    corpus: DataFrame,
+    planes: list[list[float]],
+    centroids: list[list[float]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, DataFrame]:
+    """Both frozen indexes from ONE pinned corpus pass: ``(lsh_index,
+    ivf_index)``, row for row the frames ``ann_lsh_index(corpus, planes)``
+    and ``ann_ivf_index(corpus, centroids)`` return, stamps included.
+
+    Building the two separately scans the corpus and computes every norm
+    twice.  Here ``ann_ivf_index``'s pass also computes the plane bucket
+    and the LSH eligibility flag per full-width vector in its first
+    projection, and the result is pinned with ``materialize``; each
+    index is then a narrow projection of the pinned blocks (LSH's
+    eligibility is a subset of full-width).
+    Every later consumer — probes, the exact baseline over ``ivf_index``,
+    ``train_centroids`` reading the stamped ``cell`` — reads pinned
+    blocks, never the source scan."""
+    from kafka_streams_one_to_many_join_spark.model import materialize
+
+    dim = len(centroids[0])
+    if len(planes[0]) != dim:
+        raise ValueError(
+            f"ann_indexes: planes are {len(planes[0])}-dim but centroids "
+            f"are {dim}-dim"
         )
+    base = materialize(
+        _ivf_pass(
+            corpus,
+            centroids,
+            id_col,
+            vec_col,
+            _lsh_eligible(vec_col, dim).alias("_lsh_ok"),
+            hyperplane_lsh_bucket(vec_col, planes).alias(
+                "bucket", metadata=_lsh_stamp(planes)
+            ),
+        )
+    )
+    return (
+        base.filter("_lsh_ok").select(id_col, vec_col, "norm", "bucket"),
+        base.select(id_col, vec_col, "norm", "cell"),
     )
 
 
@@ -866,14 +921,7 @@ def ann_topk_indexed(
         vec_col=vec_col,
         query_id_col=query_id_col,
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
-    )
+    return _rank_topk(scored, k, [query_id_col], id_col)
 
 
 def ann_scored_indexed(
@@ -889,23 +937,33 @@ def ann_scored_indexed(
 ) -> DataFrame:
     """``ann_topk_indexed`` WITHOUT the final ranking window: the scored
     candidate frame ``(query_id, vec_id, sim)``.  Exists so a caller
-    probing SEVERAL indexes can union the scored frames (tagged) and
-    rank them with ONE window keyed (tag, query_id) instead of one sort
-    exchange per index (r18, guide §2.4 — the ann_recall shared-window
-    pattern); per-(index, query) ranking is unchanged because the
-    window keys nest."""
+    probing SEVERAL indexes — typically the pair ``ann_indexes`` builds
+    in one pinned pass — can union the scored frames (tagged) and rank
+    them once with ``_rank_topk`` keyed ``[tag, query_id]``."""
     method, geom = _ann_resolve_geometry(
         index, planes, centroids, "ann_scored_indexed"
     )
     dim = len(geom[0])
+    join_key = "bucket" if method == "hyperplane_lsh" else "cell"
+    # Queries cut from index rows with this same stamp (a pinned
+    # ``ann_indexes`` frame, a maintained index) already carry their
+    # norm and bucket: read them instead of re-deriving.  The stamp
+    # decides, as in ``train_centroids``; the IVF probe still needs the
+    # ``nprobe`` nearest cells, which a row's one cell does not give.
+    meta = index.schema[join_key].metadata
+    own = bool(meta) and join_key in queries.columns and (
+        queries.schema[join_key].metadata == meta
+    )
+    qn = F.col("norm") if own else F.expr(norm_expr(vec_col))
     if method == "hyperplane_lsh":
         masks = probe_masks(len(geom), probe_hamming)
         mask_list = ", ".join(str(m) for m in masks)
+        b0 = F.col("bucket") if own else hyperplane_lsh_bucket(vec_col, geom)
         q = queries.filter(_lsh_eligible(vec_col, dim)).select(
             F.col(query_id_col),
             F.col(vec_col).alias("_qvec"),
-            F.expr(norm_expr(vec_col)).alias("_qn"),
-            hyperplane_lsh_bucket(vec_col, geom).alias("_b0"),
+            qn.alias("_qn"),
+            b0.alias("_b0"),
         ).select(
             query_id_col,
             "_qvec",
@@ -914,17 +972,15 @@ def ann_scored_indexed(
                 F.expr(f"transform(array({mask_list}), m -> _b0 ^ m)")
             ).alias("_qkey"),
         )
-        join_key = "bucket"
     else:
         q = queries.filter(
             F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
         ).select(
             F.col(query_id_col),
             F.col(vec_col).alias("_qvec"),
-            F.expr(norm_expr(vec_col)).alias("_qn"),
+            qn.alias("_qn"),
             F.explode(ivf_probe_cells(vec_col, geom, nprobe)).alias("_qkey"),
         )
-        join_key = "cell"
     # spread an under-partitioned index scan before the per-candidate
     # cosine work (a freshly-written small parquet index is 1-2 row
     # groups; a real at-scale index is many files and this is a no-op —

@@ -19,7 +19,10 @@ Claims proven here:
 3. the stamp survives a parquet round trip and geometry resolution
    refuses pre-stamp defaults / mismatched explicit geometry;
 4. maintenance and probe are scan-only on the index (no SortMergeJoin,
-   no full-outer, no state-sized exchange on any executed plan).
+   no full-outer, no state-sized exchange on any executed plan);
+5. ``ann_indexes``' one pinned pass equals the two single builders, and
+   a probe reads a query's own norm and bucket only under the index's
+   stamp.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from pyspark.sql import functions as F
 
 from kafka_streams_one_to_many_join_spark.functions.similarity import (
     ann_index_apply,
+    ann_indexes,
     ann_ivf_index,
     ann_lsh_index,
     ann_topk_indexed,
@@ -375,3 +379,81 @@ def test_streamed_vector_additions_then_maintenance_then_probe(
         lsh_topk(final_corpus, queries, PLANES, k=5, probe_hamming=2)
     )
     assert got == expected and got
+
+
+def _degenerate_corpus(spark, sf_dir):
+    """The fixture corpus plus one row of each degenerate shape: zero,
+    NaN element, NULL element, NULL array, empty and half-width."""
+    base = [1.0] * DIM
+    nan, null = list(base), list(base)
+    nan[3], null[5] = float("nan"), None
+    extra = spark.createDataFrame(
+        [
+            (990001, [0.0] * DIM),
+            (990002, nan),
+            (990003, null),
+            (990004, None),
+            (990005, []),
+            (990006, base[: DIM // 2]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    return _corpus(spark, sf_dir).select("vec_id", "embedding").unionByName(extra)
+
+
+def test_ann_indexes_equal_the_single_builders(spark, sf_dir):
+    """One pinned pass, two indexes: row for row and stamp for stamp the
+    frames ``ann_lsh_index`` and ``ann_ivf_index`` build, degenerate rows
+    included, and neither reads the source scan again."""
+    emb = _degenerate_corpus(spark, sf_dir)
+    lsh, ivf = ann_indexes(emb, PLANES, CENTROIDS)
+    for got, want in (
+        (lsh, ann_lsh_index(emb, PLANES)),
+        (ivf, ann_ivf_index(emb, CENTROIDS)),
+    ):
+        assert got.schema == want.schema
+        col = want.columns[-1]
+        assert got.schema[col].metadata == want.schema[col].metadata
+        # repr: NULL norms and NaN elements compare as written
+        assert sorted(map(repr, got.collect())) == sorted(
+            map(repr, want.collect())
+        )
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Scan" in plan and "parquet" not in plan.lower(), plan
+
+
+def test_probe_reads_query_rows_only_under_the_index_stamp(spark, sf_dir):
+    """Queries cut from the index's own rows probe with their stored
+    norm and bucket; queries carrying a bucket stamped with other planes
+    are re-signed.  Both equal the probe of plain (query_id, embedding)
+    queries; a forged bucket under the index's own stamp shows the
+    stored column is what the probe reads."""
+    emb = _corpus(spark, sf_dir)
+    lsh, _ = ann_indexes(emb, PLANES, CENTROIDS)
+    plain = _probe_rows(
+        ann_topk_indexed(lsh, _queries_of(lsh), k=5, probe_hamming=1)
+    )
+    assert plain
+
+    def cut(index):
+        return index.filter(F.col("vec_id") % 100 == 0).withColumnRenamed(
+            "vec_id", "query_id"
+        )
+
+    own = cut(lsh)
+    assert _probe_rows(ann_topk_indexed(lsh, own, k=5, probe_hamming=1)) == plain
+    foreign = cut(ann_lsh_index(emb, seeded_planes(8, DIM, 8)))
+    assert (
+        _probe_rows(ann_topk_indexed(lsh, foreign, k=5, probe_hamming=1))
+        == plain
+    )
+    forged = own.withColumn(
+        "bucket",
+        F.col("bucket").bitwiseXOR(255).alias(
+            "bucket", metadata=lsh.schema["bucket"].metadata
+        ),
+    )
+    assert (
+        _probe_rows(ann_topk_indexed(lsh, forged, k=5, probe_hamming=1))
+        != plain
+    )

@@ -196,6 +196,46 @@ def test_brute_force_topk_expr_vs_pandas(spark):
     assert all(abs(x.sim - y.sim) < 1e-9 for x, y in zip(a, b))
 
 
+def test_brute_force_topk_pandas_empty_query_set(spark):
+    """No query left — none given, or every query vector NULL — returns
+    the empty ranked frame, as the 'expr' face does, instead of failing
+    in ``np.stack`` on the driver."""
+    emb = _emb(spark)
+    for qpdf in (
+        pd.DataFrame({"query_id": pd.Series([], dtype="int64"), "embedding": []}),
+        pd.DataFrame({"query_id": [0, 1], "embedding": [None, None]}),
+    ):
+        df = brute_force_topk_pandas(emb, qpdf, k=5)
+        assert df.columns == ["query_id", "vec_id", "sim", "rank"]
+        assert df.collect() == []
+
+
+def test_train_centroids_reads_only_its_own_stamp(spark):
+    """The first Lloyd step reads a corpus's ``cell`` column only when its
+    IVF stamp is the ``init`` geometry: an index built on ``init`` trains
+    exactly like the bare corpus, an index built on other centroids is
+    ignored (a fresh assignment), and the stamped column really is read
+    — a forged all-cell-1 column stamped with ``init`` changes the result."""
+    from kafka_streams_one_to_many_join_spark.functions.similarity import (
+        _ivf_stamp,
+        ann_ivf_index,
+        seeded_centroids,
+        train_centroids,
+    )
+
+    emb = _emb(spark, n=60)
+    init = seeded_centroids(4, 8, seed=23)
+    fresh = train_centroids(emb, init, iters=1)
+    own = ann_ivf_index(emb, init)
+    assert train_centroids(own, init, iters=1) == fresh
+    other = ann_ivf_index(emb, seeded_centroids(4, 8, seed=5))
+    assert train_centroids(other, init, iters=1) == fresh
+    forged = own.withColumn(
+        "cell", F.lit(1).alias("cell", metadata=_ivf_stamp(init))
+    )
+    assert train_centroids(forged, init, iters=1) != fresh
+
+
 def test_lsh_topk_subset_of_exact(spark):
     emb = _emb(spark, n=50)
     queries = emb.filter(F.col("vec_id") < 2).select(

@@ -63,6 +63,22 @@ def test_parity(name, spark, duck, sf_dir):
         raise AssertionError(f"{name}: value mismatch\n{e}") from None
 
 
+def test_ann_topk_query_cap_parity(spark, duck, sf_dir, monkeypatch):
+    """The 'pandas' face answers only the first ``_ANN_QUERY_CAP`` query
+    ids, and the oracle applies the same cap, read when ``oracle_sql()``
+    runs.  A cap of 2 reaches the capped branch at fixture size."""
+    monkeypatch.setattr(entry_mod, "_ANN_QUERY_CAP", 2)
+    spark_pdf = entry_mod.queries()["ann_topk"](spark, sf_dir).toPandas()
+    oracle_pdf = duck.execute(entry_mod.oracle_sql()["ann_topk"]).fetchdf()
+    faces = spark_pdf.groupby("method")["query_id"].nunique().to_dict()
+    assert faces["pandas"] == 2 < faces["expr"], faces
+    assert len(spark_pdf) == len(oracle_pdf)
+    pd.testing.assert_frame_equal(
+        _normalize(spark_pdf), _normalize(oracle_pdf), check_dtype=False,
+        check_exact=True,
+    )
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

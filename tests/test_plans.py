@@ -655,6 +655,18 @@ def test_lsh_topk_explodes_query_side_only(spark, sf_dir):
     assert plan.count("+- Generate") == 1, plan
 
 
+def test_ann_composites_read_only_pinned_blocks(spark, sf_dir):
+    """ann_recall and ann_topk_maintained build their indexes in one
+    pinned pass (``ann_indexes``): the final plan reads checkpointed
+    blocks only — no parquet scan — and keeps its exchange count (4 and
+    2: the faces share one ranking window)."""
+    for name, max_shuffles in (("ann_recall", 4), ("ann_topk_maintained", 2)):
+        df = entry_mod.queries()[name](spark, sf_dir)
+        plan = plans.formatted_plan(df)
+        assert "Scan parquet" not in plan, (name, plan)
+        assert plans.count_shuffles(df) <= max_shuffles, (name, plan)
+
+
 def test_brand_price_rank_broadcasts_brand_stats(spark, sf_dir):
     """The consolidated per-brand aggregate attaches to the window rows
     via broadcast — the |brands|-row side must never trigger a
