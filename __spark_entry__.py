@@ -950,11 +950,9 @@ def _emb_full_width(emb: DataFrame) -> DataFrame:
 
 def _ann_queries(emb: DataFrame) -> DataFrame:
     """The ANN family's query set — the oracles' ``WHERE vec_id % 100 =
-    0`` — with ``vec_id`` renamed ``query_id``.  Every other column rides
-    along, so queries cut from an index keep its stamped norm and bucket
-    for ``ann_scored_indexed`` to read."""
-    return emb.filter(F.col("vec_id") % 100 == 0).withColumnRenamed(
-        "vec_id", "query_id"
+    0`` — as ``(query_id, embedding)``."""
+    return emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
     )
 
 
@@ -1047,19 +1045,24 @@ def q_ann_topk_maintained(spark: SparkSession, sf: str) -> DataFrame:
     # nightly index is WRITTEN after maintenance and the probe reads the
     # stored rows (SCALE.md r16's 0.106× probe measurement is exactly
     # that).  Geometry stamps survive the checkpoint (column metadata
-    # rides the schema), so the probe still resolves planes/centroids
-    # from the pinned frame.
+    # rides the schema), so the planes/centroids passed to the
+    # maintenance and the probe are checked against the pinned frame's
+    # stamp (on the JVM, see similarity._has_stamp).
     m_lsh = materialize(
-        ann_index_apply(lsh_index, upserts=upserts, delete_ids=deletes)
+        ann_index_apply(
+            lsh_index, upserts=upserts, delete_ids=deletes, planes=planes
+        )
     )
     m_ivf = materialize(
-        ann_index_apply(ivf_index, upserts=upserts, delete_ids=deletes)
+        ann_index_apply(
+            ivf_index, upserts=upserts, delete_ids=deletes, centroids=cents
+        )
     )
     scored = ann_scored_indexed(
-        m_lsh, _ann_queries(m_lsh), probe_hamming=2
+        m_lsh, _ann_queries(m_lsh), probe_hamming=2, planes=planes
     ).withColumn("method", F.lit("lsh")).unionByName(
         ann_scored_indexed(
-            m_ivf, _ann_queries(m_ivf), nprobe=_IVF_NPROBE
+            m_ivf, _ann_queries(m_ivf), nprobe=_IVF_NPROBE, centroids=cents
         ).withColumn("method", F.lit("ivf"))
     )
     return _rank_topk(scored, 10, ["method", "query_id"]).select(
@@ -3873,26 +3876,30 @@ def q_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
         train_centroids,
     )
 
+    planes = seeded_planes(_N_PLANES, _EMB_DIM, _PLANES_SEED)
     cents = seeded_centroids(_IVF_NLIST, _EMB_DIM, _IVF_SEED)
     lsh_index, ivf_index = ann_indexes(
-        load_table(spark, sf, "embeddings"),
-        seeded_planes(_N_PLANES, _EMB_DIM, _PLANES_SEED),
-        cents,
+        load_table(spark, sf, "embeddings"), planes, cents
     )
     queries = _ann_queries(ivf_index)
     exact = materialize(
         brute_force_topk(ivf_index, queries, k=10).select("query_id", "vec_id")
     )
-    trained_index = ann_ivf_index(
-        ivf_index, train_centroids(ivf_index, cents, iters=1)
-    )
+    trained = train_centroids(ivf_index, cents, iters=1)
+    # geometry passed explicitly: checked against each stamp on the JVM
+    # instead of read back from it (see similarity._has_stamp)
     faces = {
         "lsh": ann_scored_indexed(
-            lsh_index, _ann_queries(lsh_index), probe_hamming=2
+            lsh_index, queries, probe_hamming=2, planes=planes
         ),
-        "ivf": ann_scored_indexed(ivf_index, queries, nprobe=_IVF_NPROBE),
+        "ivf": ann_scored_indexed(
+            ivf_index, queries, nprobe=_IVF_NPROBE, centroids=cents
+        ),
         "ivf_trained": ann_scored_indexed(
-            trained_index, queries, nprobe=_IVF_NPROBE
+            ann_ivf_index(ivf_index, trained),
+            queries,
+            nprobe=_IVF_NPROBE,
+            centroids=trained,
         ),
     }
     approx = _rank_topk(

@@ -21,6 +21,7 @@ over the (small, query-partitioned) candidate set.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, Window
@@ -444,10 +445,7 @@ def train_centroids(
         F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
     )
     cents = [list(c) for c in init]
-    stamped = (
-        "cell" in corpus.columns
-        and corpus.schema["cell"].metadata == _ivf_stamp(cents)
-    )
+    stamped = _has_stamp(corpus, "cell", _ivf_stamp(cents))
     for it in range(iters):
         assign = F.col("cell") if (it == 0 and stamped) else ivf_cell(vec_col, cents)
         rows = (
@@ -608,6 +606,19 @@ def _ivf_stamp(centroids: list[list[float]]) -> dict:
     }
 
 
+def _has_stamp(df: DataFrame, col: str, stamp: dict) -> bool:
+    """Whether ``df``'s ``col`` carries exactly ``stamp``, compared on the
+    JVM.  Reading a stamp into Python renders every geometry float to
+    text there (~40 ms per 1,024 floats on JDK 17, paid by ``df.schema``
+    and ``df.columns`` on a stamped frame); parsing ``stamp`` there costs
+    a few ms."""
+    jschema = df._jdf.schema()
+    if col not in list(jschema.fieldNames()):
+        return False
+    meta = df.sparkSession._jvm.org.apache.spark.sql.types.Metadata
+    return jschema.apply(col).metadata().equals(meta.fromJson(json.dumps(stamp)))
+
+
 def _lsh_eligible(vec_col: str, dim: int) -> Column:
     """Scan-level eligibility for the LSH index: full-width, every
     element non-NULL/non-NaN, not the zero vector — the union of
@@ -662,23 +673,11 @@ def ann_ivf_index(
     argmax — the one-evaluation plan, see ``ivf_topk``), full centroid
     table stamped into ``cell``'s metadata.  Eligibility is the IVF
     family's: full-width vectors only (``ivf_topk``'s r11 guard)."""
-    return _ivf_pass(corpus, centroids, id_col, vec_col)
-
-
-def _ivf_pass(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str,
-    vec_col: str,
-    *extra: Column,
-) -> DataFrame:
-    """``ann_ivf_index``'s pass, plus ``extra`` (aliased) columns computed
-    in the same projection as the norm and the centroid dots:
-    ``(id, vec, norm, *extra, cell)``."""
     from kafka_streams_one_to_many_join_spark.model import ensure_parallelism
 
     dim = len(centroids[0])
-    dots = (
+    ds = _cell_dots_expr(vec_col, centroids)
+    return (
         ensure_parallelism(
             corpus.filter(
                 F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
@@ -688,15 +687,16 @@ def _ivf_pass(
             F.col(id_col),
             F.col(vec_col),
             F.expr(norm_expr(vec_col)).alias("norm"),
-            *extra,
-            F.expr(_cell_dots_expr(vec_col, centroids)).alias("_dots"),
+            F.expr(ds).alias("_dots"),
         )
-    )
-    return dots.select(
-        *[c for c in dots.columns if c != "_dots"],
-        F.expr("array_position(_dots, array_max(_dots))")
-        .cast("int")
-        .alias("cell", metadata=_ivf_stamp(centroids)),
+        .select(
+            F.col(id_col),
+            F.col(vec_col),
+            "norm",
+            F.expr("array_position(_dots, array_max(_dots))")
+            .cast("int")
+            .alias("cell", metadata=_ivf_stamp(centroids)),
+        )
     )
 
 
@@ -704,19 +704,17 @@ def ann_indexes(
     corpus: DataFrame,
     planes: list[list[float]],
     centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """Both frozen indexes from ONE pinned corpus pass: ``(lsh_index,
     ivf_index)``, row for row the frames ``ann_lsh_index(corpus, planes)``
     and ``ann_ivf_index(corpus, centroids)`` return, stamps included.
 
     Building the two separately scans the corpus and computes every norm
-    twice.  Here ``ann_ivf_index``'s pass also computes the plane bucket
-    and the LSH eligibility flag per full-width vector in its first
-    projection, and the result is pinned with ``materialize``; each
-    index is then a narrow projection of the pinned blocks (LSH's
-    eligibility is a subset of full-width).
+    twice.  Here the plane bucket and the LSH eligibility flag ride on
+    ``ann_ivf_index``'s output (its projections collapse into one pass,
+    the centroid dots still evaluated once), and the result is pinned
+    with ``materialize``; each index is then a narrow projection of the
+    pinned blocks (LSH's eligibility is a subset of full-width).
     Every later consumer — probes, the exact baseline over ``ivf_index``,
     ``train_centroids`` reading the stamped ``cell`` — reads pinned
     blocks, never the source scan."""
@@ -729,28 +727,27 @@ def ann_indexes(
             f"are {dim}-dim"
         )
     base = materialize(
-        _ivf_pass(
-            corpus,
-            centroids,
-            id_col,
-            vec_col,
-            _lsh_eligible(vec_col, dim).alias("_lsh_ok"),
-            hyperplane_lsh_bucket(vec_col, planes).alias(
-                "bucket", metadata=_lsh_stamp(planes)
-            ),
+        ann_ivf_index(corpus, centroids).withColumns(
+            {
+                "_lsh_ok": _lsh_eligible("embedding", dim),
+                "bucket": hyperplane_lsh_bucket("embedding", planes).alias(
+                    "bucket", metadata=_lsh_stamp(planes)
+                ),
+            }
         )
     )
     return (
-        base.filter("_lsh_ok").select(id_col, vec_col, "norm", "bucket"),
-        base.select(id_col, vec_col, "norm", "cell"),
+        base.filter("_lsh_ok").select("vec_id", "embedding", "norm", "bucket"),
+        base.select("vec_id", "embedding", "norm", "cell"),
     )
 
 
 def _ann_state_col(index: DataFrame, op: str) -> str:
     """The index's state column: ``bucket`` (LSH) or ``cell`` (IVF)."""
-    if "bucket" in index.columns:
+    names = list(index._jdf.columns())  # not index.columns: see _has_stamp
+    if "bucket" in names:
         return "bucket"
-    if "cell" in index.columns:
+    if "cell" in names:
         return "cell"
     raise ValueError(
         f"{op}: DataFrame is not an ANN index — expected a 'bucket' "
@@ -774,8 +771,6 @@ def _ann_resolve_geometry(
     REFUSES to default: the matching geometry must be passed explicitly
     (the minhash pre-stamp precedent, ADVICE r14)."""
     state_col = _ann_state_col(index, op)
-    meta = dict(index.schema[state_col].metadata or {})
-    method = meta.get("method")
     given = planes if state_col == "bucket" else centroids
     wrong_kind = centroids if state_col == "bucket" else planes
     if wrong_kind is not None and given is None:
@@ -785,32 +780,32 @@ def _ann_resolve_geometry(
             "geometry was passed — pass the matching kind"
         )
     key = "planes" if state_col == "bucket" else "centroids"
-    if method is None:
-        if given is None:
-            raise ValueError(
-                f"{op}: the index carries no construction stamp and no "
-                f"{key} were passed explicitly; probing or maintaining a "
-                "pre-stamp index under defaulted geometry silently returns "
-                f"wrong candidate sets.  Pass the {key} the index was "
-                "built with, or rebuild it once with "
-                f"ann_{'lsh' if key == 'planes' else 'ivf'}_index to stamp it"
-            )
-        return ("hyperplane_lsh" if state_col == "bucket" else "ivf"), [
-            list(g) for g in given
-        ]
-    flat = [float(x) for x in meta["geometry_flat"]]
-    dim = int(meta["dim"])
-    stamped = [flat[i : i + dim] for i in range(0, len(flat), dim)]
+    stamped = index._jdf.schema().apply(state_col).metadata().contains("method")
     if given is not None:
+        # validated on the JVM (``_has_stamp``), never read back
         cand = [list(g) for g in given]
-        if cand != stamped:
+        stamp = (_lsh_stamp if state_col == "bucket" else _ivf_stamp)(cand)
+        if stamped and not _has_stamp(index, state_col, stamp):
             raise ValueError(
                 f"{op}: the {key} passed differ from the index's stamped "
                 "construction geometry; results would be silently wrong — "
                 "rebuild the index or drop the explicit argument to use "
                 "the stamp"
             )
-    return method, stamped
+        return stamp["method"], cand
+    if not stamped:
+        raise ValueError(
+            f"{op}: the index carries no construction stamp and no "
+            f"{key} were passed explicitly; probing or maintaining a "
+            "pre-stamp index under defaulted geometry silently returns "
+            f"wrong candidate sets.  Pass the {key} the index was "
+            "built with, or rebuild it once with "
+            f"ann_{'lsh' if key == 'planes' else 'ivf'}_index to stamp it"
+        )
+    meta = index.schema[state_col].metadata
+    flat = [float(x) for x in meta["geometry_flat"]]
+    dim = int(meta["dim"])
+    return meta["method"], [flat[i : i + dim] for i in range(0, len(flat), dim)]
 
 
 def ann_index_apply(
@@ -882,7 +877,7 @@ def ann_index_apply(
         if del_ids is not None:
             # deletes win over same-day upserts (band/segment precedent)
             new_rows = new_rows.join(F.broadcast(del_ids), id_col, "left_anti")
-        out = out.unionByName(new_rows.select(*out.columns))
+        out = out.unionByName(new_rows)
     return out
 
 
@@ -944,26 +939,14 @@ def ann_scored_indexed(
         index, planes, centroids, "ann_scored_indexed"
     )
     dim = len(geom[0])
-    join_key = "bucket" if method == "hyperplane_lsh" else "cell"
-    # Queries cut from index rows with this same stamp (a pinned
-    # ``ann_indexes`` frame, a maintained index) already carry their
-    # norm and bucket: read them instead of re-deriving.  The stamp
-    # decides, as in ``train_centroids``; the IVF probe still needs the
-    # ``nprobe`` nearest cells, which a row's one cell does not give.
-    meta = index.schema[join_key].metadata
-    own = bool(meta) and join_key in queries.columns and (
-        queries.schema[join_key].metadata == meta
-    )
-    qn = F.col("norm") if own else F.expr(norm_expr(vec_col))
     if method == "hyperplane_lsh":
         masks = probe_masks(len(geom), probe_hamming)
         mask_list = ", ".join(str(m) for m in masks)
-        b0 = F.col("bucket") if own else hyperplane_lsh_bucket(vec_col, geom)
         q = queries.filter(_lsh_eligible(vec_col, dim)).select(
             F.col(query_id_col),
             F.col(vec_col).alias("_qvec"),
-            qn.alias("_qn"),
-            b0.alias("_b0"),
+            F.expr(norm_expr(vec_col)).alias("_qn"),
+            hyperplane_lsh_bucket(vec_col, geom).alias("_b0"),
         ).select(
             query_id_col,
             "_qvec",
@@ -972,15 +955,17 @@ def ann_scored_indexed(
                 F.expr(f"transform(array({mask_list}), m -> _b0 ^ m)")
             ).alias("_qkey"),
         )
+        join_key = "bucket"
     else:
         q = queries.filter(
             F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim)
         ).select(
             F.col(query_id_col),
             F.col(vec_col).alias("_qvec"),
-            qn.alias("_qn"),
+            F.expr(norm_expr(vec_col)).alias("_qn"),
             F.explode(ivf_probe_cells(vec_col, geom, nprobe)).alias("_qkey"),
         )
+        join_key = "cell"
     # spread an under-partitioned index scan before the per-candidate
     # cosine work (a freshly-written small parquet index is 1-2 row
     # groups; a real at-scale index is many files and this is a no-op —

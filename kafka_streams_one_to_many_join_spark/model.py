@@ -226,12 +226,25 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
        — on such leaf plans the conversion runs no job; if the plan
        contains a broadcast/subquery anyway (building its RDD WOULD run
        the broadcast job), skip instead of probing.
+
+    Before all of these: a plan whose every leaf is an RDD that already
+    has ``floor`` partitions (a pinned ``materialize`` frame and any
+    projection, filter or union over such frames) is left alone after
+    reading the leaves' partition counts from the analyzed plan — no
+    physical planning, no RDD built for the whole plan.
     """
     if df.isStreaming:  # micro-batch partitioning is the engine's concern
         return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     floor = max(2, target // 2)
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    if all(
+        leaf.getClass().getSimpleName() == "LogicalRDD"
+        and leaf.rdd().getNumPartitions() >= floor
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+    ):
+        return df
     # CHEAP check first (r18, ADVICE r17: rendering executedPlan() pays
     # full analysis+optimization+physical planning of the subtree — up
     # to ~0.5 s on the in-flight index trees — and the caller's final

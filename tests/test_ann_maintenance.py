@@ -21,8 +21,8 @@ Claims proven here:
 4. maintenance and probe are scan-only on the index (no SortMergeJoin,
    no full-outer, no state-sized exchange on any executed plan);
 5. ``ann_indexes``' one pinned pass equals the two single builders, and
-   a probe reads a query's own norm and bucket only under the index's
-   stamp.
+   a probe derives a query's norm and bucket from its embedding, never
+   from index columns the query rows carry.
 """
 
 from __future__ import annotations
@@ -256,6 +256,10 @@ def test_ann_index_prestamp_refuses_defaults(spark):
         ann_index_apply(bare, delete_ids=emb.limit(1).select("vec_id"))
     got = ann_topk_indexed(bare, q, k=1, probe_hamming=3, planes=PLANES)
     assert got.count() > 0
+    # the stamped geometry passed explicitly is accepted as the stamp
+    assert _probe_rows(
+        ann_topk_indexed(index, q, k=1, probe_hamming=3, planes=PLANES)
+    ) == _probe_rows(ann_topk_indexed(index, q, k=1, probe_hamming=3))
     other = seeded_planes(8, DIM, 99)
     with pytest.raises(ValueError, match="stamped construction geometry"):
         ann_topk_indexed(index, q, planes=other)
@@ -422,30 +426,20 @@ def test_ann_indexes_equal_the_single_builders(spark, sf_dir):
         assert "Scan" in plan and "parquet" not in plan.lower(), plan
 
 
-def test_probe_reads_query_rows_only_under_the_index_stamp(spark, sf_dir):
-    """Queries cut from the index's own rows probe with their stored
-    norm and bucket; queries carrying a bucket stamped with other planes
-    are re-signed.  Both equal the probe of plain (query_id, embedding)
-    queries; a forged bucket under the index's own stamp shows the
-    stored column is what the probe reads."""
+def test_probe_derives_query_geometry_from_the_embedding(spark, sf_dir):
+    """Queries cut from the index's own rows carry its norm and stamped
+    bucket; the probe ignores both and derives them from the embedding,
+    so those queries, and the same rows with a forged bucket under the
+    index's stamp, probe exactly like plain (query_id, embedding)
+    queries."""
     emb = _corpus(spark, sf_dir)
     lsh, _ = ann_indexes(emb, PLANES, CENTROIDS)
     plain = _probe_rows(
         ann_topk_indexed(lsh, _queries_of(lsh), k=5, probe_hamming=1)
     )
     assert plain
-
-    def cut(index):
-        return index.filter(F.col("vec_id") % 100 == 0).withColumnRenamed(
-            "vec_id", "query_id"
-        )
-
-    own = cut(lsh)
-    assert _probe_rows(ann_topk_indexed(lsh, own, k=5, probe_hamming=1)) == plain
-    foreign = cut(ann_lsh_index(emb, seeded_planes(8, DIM, 8)))
-    assert (
-        _probe_rows(ann_topk_indexed(lsh, foreign, k=5, probe_hamming=1))
-        == plain
+    own = lsh.filter(F.col("vec_id") % 100 == 0).withColumnRenamed(
+        "vec_id", "query_id"
     )
     forged = own.withColumn(
         "bucket",
@@ -453,7 +447,8 @@ def test_probe_reads_query_rows_only_under_the_index_stamp(spark, sf_dir):
             "bucket", metadata=lsh.schema["bucket"].metadata
         ),
     )
-    assert (
-        _probe_rows(ann_topk_indexed(lsh, forged, k=5, probe_hamming=1))
-        != plain
-    )
+    for queries in (own, forged):
+        assert (
+            _probe_rows(ann_topk_indexed(lsh, queries, k=5, probe_hamming=1))
+            == plain
+        )

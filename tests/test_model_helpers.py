@@ -71,6 +71,25 @@ def test_ensure_parallelism_checkpointed_leaf_no_jobs(spark, sf_dir):
     assert out.count() == pinned.count()
 
 
+def test_ensure_parallelism_spread_pinned_leaves_build_no_rdd(
+    spark, sf_dir, monkeypatch
+):
+    """A narrow plan over pinned frames that already have enough
+    partitions is decided from the leaves alone; a pinned frame with one
+    partition is still spread."""
+    target = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    pinned = materialize(docs.repartition(target))
+    narrow = pinned.filter("doc_id > 0").unionByName(pinned)
+    with monkeypatch.context() as m:
+        m.setattr(
+            type(narrow), "rdd", property(lambda self: pytest.fail("RDD built"))
+        )
+        assert ensure_parallelism(narrow) is narrow
+    single = materialize(docs.coalesce(1))
+    assert ensure_parallelism(single) is not single
+
+
 def test_ensure_parallelism_well_partitioned_is_noop(spark):
     target = spark.sparkContext.defaultParallelism
     df = spark.range(0, 1000, 1, numPartitions=target)
